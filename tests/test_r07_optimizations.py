@@ -5,6 +5,8 @@ must actually drop a Python evaluation node."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -14,9 +16,32 @@ def _rows(df, order_cols):
     return df.orderBy(*order_cols).collect()
 
 
+def _final_plan_nodes(df) -> list[str]:
+    """Node names of the executed plan, the AQE-final plan when adaptive
+    (call after the frame has run)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return re.findall(
+        r"(?m)^[\s+\-:|]*(?:\*\(\d+\) )?(\w+)", plan.toString()
+    )
+
+
 @pytest.fixture(scope="module")
 def events(spark, sf01_dir):
     return spark.read.parquet(f"{sf01_dir}/events.parquet")
+
+
+@pytest.fixture(scope="module")
+def tiny_groups(spark, tmp_path_factory):
+    """Transcripts with the per-conversation shape (~3.5 turns per
+    conv_id, a few thousand conversations) and enough rows for the
+    'auto' probe to trust its sample."""
+    from tgdigest_spark.datagen import write_transcripts
+
+    return spark.read.parquet(
+        write_transcripts(str(tmp_path_factory.mktemp("tiny")), sf=0.003)
+    )
 
 
 class TestFusedExtraction:
@@ -323,6 +348,170 @@ class TestRepartitionTopology:
             events, ["event_type"], "value", [0.5], method="combine"
         ).count()
         assert n_auto == n_com
+
+    @pytest.mark.parametrize("aqe", ["true", "false"])
+    def test_latency_plan_reuses_window_shuffle(self, spark, tiny_groups, aqe):
+        """The lag window's conv_id exchange is the co-location the
+        single pass needs: one Exchange and one Python node in total,
+        rows bit-identical to the two-pass combine topology."""
+        from tgdigest_spark.agg import sketch_quantiles_by_key
+        from tgdigest_spark.api import (
+            grouped_latency_quantiles, interturn_latency_seconds,
+        )
+        from tgdigest_spark.sketches.tdigest import TDigest
+
+        prev = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        try:
+            got = grouped_latency_quantiles(tiny_groups, [0.5, 0.95])
+            got_rows = sorted(got.collect(), key=lambda r: r["conv_id"])
+            ref = sketch_quantiles_by_key(
+                interturn_latency_seconds(tiny_groups),
+                ["conv_id"],
+                "latency_s",
+                lambda: TDigest(200),
+                [0.5, 0.95],
+                method="combine",
+            )
+            ref_rows = sorted(ref.collect(), key=lambda r: r["conv_id"])
+            got_nodes = _final_plan_nodes(got)
+            ref_nodes = _final_plan_nodes(ref)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", prev)
+        assert got_nodes.count("Exchange") == 1
+        assert got_nodes.count("MapInPandas") == 1
+        assert ref_nodes.count("Exchange") == 2
+        assert ref_nodes.count("MapInPandas") == 2
+        assert len(got_rows) > 1000
+        assert got_rows == ref_rows
+
+    def test_default_picks_single_pass_for_tiny_groups_only(
+        self, spark, tiny_groups
+    ):
+        from tgdigest_spark.agg import _auto_method
+        from tgdigest_spark.api import grouped_quantiles
+
+        assert _auto_method(tiny_groups, ["conv_id"]) == "repartition"
+        assert _auto_method(tiny_groups, ["role"]) == "combine"
+        length = F.length("text").cast("double")
+        by_conv = grouped_quantiles(tiny_groups, ["conv_id"], length, [0.5])
+        by_role = grouped_quantiles(tiny_groups, ["role"], length, [0.5])
+        by_conv.collect()
+        by_role.collect()
+        assert _final_plan_nodes(by_conv).count("MapInPandas") == 1
+        assert _final_plan_nodes(by_role).count("MapInPandas") == 2
+
+    def test_default_matches_combine_per_sketch(self, spark, tiny_groups):
+        """The single pass builds each group from exactly its values, so
+        KLL (groups of <= k values) and HLL blobs are the same bytes as
+        combine's merged partials. Round-robin input splits most
+        conversations across map partitions, so combine really merges.
+        Tiny t-digest groups keep unit centroids through combine's
+        merge, so its estimates match too: the single pass inherits
+        combine's rank accuracy exactly."""
+        from tgdigest_spark.agg import _auto_method, sketch_by_key
+        from tgdigest_spark.api import grouped_quantiles, grouped_quantiles_kll
+        from tgdigest_spark.sketches.hll import HLL
+
+        split = tiny_groups.repartition(7)
+        assert _auto_method(split, ["conv_id"]) == "repartition"
+        length = F.length("text").cast("double")
+        qs = [0.5, 0.95]
+        for api_fn in (grouped_quantiles, grouped_quantiles_kll):
+            got = api_fn(split, ["conv_id"], length, qs)
+            ref = api_fn(split, ["conv_id"], length, qs, method="combine")
+            assert _rows(got, ["conv_id"]) == _rows(ref, ["conv_id"]), api_fn
+
+        tool = F.coalesce(F.col("tool"), F.col("role"))
+        hll = sketch_by_key(split, ["conv_id"], tool, lambda: HLL(12))
+        hll_ref = sketch_by_key(
+            split, ["conv_id"], tool, lambda: HLL(12), method="combine"
+        )
+        assert _rows(hll, ["conv_id"]) == _rows(hll_ref, ["conv_id"])
+
+    def test_non_numeric_shuffle_partitions_conf(
+        self, spark, tiny_groups, monkeypatch
+    ):
+        """A conf value such as 'auto' must not crash the single pass
+        (now the default for tiny groups) nor the partition estimate."""
+        from pyspark.sql.conf import RuntimeConfig
+
+        from tgdigest_spark.agg import _estimated_partitions
+        from tgdigest_spark.api import grouped_quantiles
+
+        real_get = RuntimeConfig.get
+
+        def get(self, key, *args, **kw):
+            if key == "spark.sql.shuffle.partitions":
+                return "auto"
+            return real_get(self, key, *args, **kw)
+
+        monkeypatch.setattr(RuntimeConfig, "get", get)
+        length = F.length("text").cast("double")
+        n_groups = tiny_groups.select("conv_id").distinct().count()
+        assert (
+            grouped_quantiles(tiny_groups, ["conv_id"], length, [0.5]).count()
+            == n_groups
+        )
+        assert (
+            grouped_quantiles(
+                tiny_groups, ["conv_id"], length, [0.5], method="repartition"
+            ).count()
+            == n_groups
+        )
+        assert _estimated_partitions(tiny_groups) >= 200
+
+    def test_single_pass_width_is_one_wave_capped_by_conf(
+        self, spark, tiny_groups
+    ):
+        """The raw-row shuffle runs one task per core on a small scan,
+        never more than the shuffle-partition conf, and leaves inputs
+        it cannot size to Spark."""
+        from tgdigest_spark.agg import _single_pass_partitions
+        from tgdigest_spark.api import grouped_quantiles
+
+        par = spark.sparkContext.defaultParallelism
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", "200")
+            assert _single_pass_partitions(tiny_groups, ["conv_id"]) == par
+            length = F.length("text").cast("double")
+            out = grouped_quantiles(tiny_groups, ["conv_id"], length, [0.5])
+            out.collect()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert re.search(
+                rf"hashpartitioning\(conv_id#\d+, {par}\), REPARTITION_BY_NUM",
+                plan,
+            )
+            spark.conf.set("spark.sql.shuffle.partitions", "2")
+            assert _single_pass_partitions(tiny_groups, ["conv_id"]) == 2
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        derived = tiny_groups.groupBy("conv_id").count()
+        assert _single_pass_partitions(derived, ["conv_id"]) is None
+
+    def test_probe_resolves_keys_by_expr_id(self, spark, tmp_path):
+        """A key produced by an Alias is not the file column of the same
+        name: the probe must not sample the file's own ``k``."""
+        import pandas as pd
+
+        from tgdigest_spark.agg import _auto_method, _scan_files_for_keys
+
+        n = 8192
+        path = str(tmp_path / "alias.parquet")
+        pd.DataFrame(
+            {
+                "k": [f"c{i // 4}" for i in range(n)],  # tiny groups
+                "other": [f"r{i % 3}" for i in range(n)],  # 3 groups
+                "v": np.arange(n, dtype=np.float64),
+            }
+        ).to_parquet(path, index=False)
+        df = spark.read.parquet(path)
+        assert _auto_method(df, ["k"]) == "repartition"
+        assert _auto_method(df.select("k", "v"), ["k"]) == "repartition"
+        aliased = df.select(F.col("other").alias("k"), "v")
+        assert _scan_files_for_keys(aliased, ["k"]) is None
+        assert _auto_method(aliased, ["k"]) == "combine"
 
 
 class TestHeavyHittersTierSkip:

@@ -12,11 +12,35 @@ exercised locally on local[N]):
   SURVEY.md §4).
 
 * **Per-key sketch** (one sketch per group, e.g. per conv_id):
-  - ``method='combine'`` (default): map-side partial per (partition,
-    key) via pandas groupby inside ``mapInPandas``, then ONE shuffle of
-    small blobs + ``applyInPandas`` merge per key. Conversation-length
-    skew is absorbed map-side: a hot key's rows are pre-reduced to one
-    blob per partition before the shuffle.
+  - ``method='auto'`` (default): the input picks between ``combine``
+    and ``repartition``. A first-batch sample of the key columns
+    (:func:`_auto_method`, tens of ms) takes ``repartition`` for the
+    tiny-group regime (a few rows per key over many keys, e.g. per
+    conversation) and ``combine`` for everything else, including any
+    input it cannot cheaply sample (derived plans, aliased keys,
+    non-parquet files). The choice moves speed only, never the bound:
+    both branches build each group's sketch from exactly that group's
+    values, and a sketch built in one pass carries the same published
+    error bound as any merge tree of partials (Agarwal et al.,
+    "Mergeable Summaries", PODS 2012). Register-style and linear
+    sketches (HLL, count-min, DDSketch) and KLL groups of at most k
+    values come out bit-identical; t-digest centroids may differ
+    within the digest's rank bound.
+  - ``method='combine'``: map-side partial per (partition, key) via
+    pandas groupby inside ``mapInPandas``, then ONE shuffle of small
+    blobs + a merge pass per key. Conversation-length skew is absorbed
+    map-side: a hot key's rows are pre-reduced to one blob per
+    partition before the shuffle. In the tiny-group regime the
+    "partial" is just the raw values, so the blob shuffle and the
+    second Python pass are pure overhead.
+  - ``method='repartition'``: ONE hash shuffle of the raw (keys,
+    value) projection, then the ``clustered`` single pass. A parquet
+    scan is shuffled onto one wave of tasks (one per core, more as the
+    input grows, see :func:`_single_pass_partitions`); any other input
+    at the session's shuffle width, so when it is already
+    hash-partitioned by the keys (e.g. the output of a
+    ``Window.partitionBy(keys)``) Spark drops the repartition and the
+    plan holds one Exchange.
   - ``method='salted'``: explicit two-stage salted repartitioning
     (north_rule): groupBy(key, salt=pmod(xxhash64(salt_col), S)) →
     partial → groupBy(key) → merge. Use when per-partition key
@@ -37,6 +61,7 @@ All data movement is Arrow-batched; sketch updates are numpy-vectorized
 from __future__ import annotations
 
 import functools
+import os
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -115,6 +140,17 @@ def sketch_column(
     return _tree_merge(partials, factory, fanout)
 
 
+def _shuffle_partitions(spark) -> int | None:
+    """``spark.sql.shuffle.partitions`` as an int, or None when the conf
+    holds a non-numeric value (e.g. 'auto' on platforms whose AQE sizes
+    shuffles itself) — every valid conf value must leave a call
+    working."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except (ValueError, TypeError):
+        return None
+
+
 def _estimated_partitions(df: DataFrame) -> int:
     """Plan-time UPPER estimate of a DataFrame's partition count WITHOUT
     touching ``.rdd`` (which materializes the plan as an RDD and does
@@ -134,14 +170,7 @@ def _estimated_partitions(df: DataFrame) -> int:
         est = max(est, df.sparkSession.sparkContext.defaultParallelism)
     except Exception:  # pragma: no cover — Spark Connect: no SparkContext
         pass
-    try:
-        est = max(
-            est,
-            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
-    except (ValueError, TypeError):  # e.g. AQE 'auto' on some platforms
-        est = max(est, 200)
-    return est
+    return max(est, _shuffle_partitions(df.sparkSession) or 200)
 
 
 def _tree_merge(partials: DataFrame, factory: SketchFactory, fanout: int) -> Sketch:
@@ -181,7 +210,7 @@ def _tree_merge(partials: DataFrame, factory: SketchFactory, fanout: int) -> Ske
 # per-key sketches
 # ---------------------------------------------------------------------------
 
-# 'auto' topology dispatch (round-7, guide §2.3/§2.4): choose between
+# 'auto' topology dispatch, the sketch_by_key default: choose between
 # the blob-shuffle 'combine' and the raw-row 'repartition' topologies
 # from a cheap sample of the key column. Tiny groups (the
 # per-conversation regime: a few rows per key) make map-side combine a
@@ -189,20 +218,30 @@ def _tree_merge(partials: DataFrame, factory: SketchFactory, fanout: int) -> Ske
 # "partial" is a per-row digest and the blob shuffle carries MORE bytes
 # than the raw rows would, plus a second build+merge pass and a second
 # Python crossing (measured at sf1.0: combine 4.1 s vs
-# repartition+clustered 3.0 s for 10^6 conv groups; crossover near
-# 10^3 rows/group). Both branches compute one sketch per group from
-# exactly the group's values, so the dispatch affects speed only.
+# repartition+clustered 3.0 s for 10^6 conv groups; at sf0.05 on 4
+# cores: 0.98 vs 0.68 s per-conversation t-digest). Few-group keys
+# keep combine: the raw-row shuffle sends each group's rows whole to
+# one reduce task, where combine pre-reduces a hot key map-side. Both
+# branches compute one sketch per group from exactly the group's
+# values, so the dispatch affects speed only.
 _AUTO_SAMPLE_ROWS = 65536
 _AUTO_MAX_ROWS_PER_GROUP = 256
 _AUTO_MIN_GROUPS_PER_SLOT = 4
 
 
+def _java_seq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
 def _scan_files_for_keys(df: DataFrame, keys: list[str]) -> list[str] | None:
     """The parquet files behind ``df`` IF its optimized plan is a pure
     scan chain (Project/Filter/Repartition over one file relation) and
-    every key is a physical column of the files — else None. Used to
-    gate the 'auto' probe so it never re-executes derived upstream
-    compute (joins, aggregates, Python stages) just to pick a topology.
+    every key is a scanned column passed through unchanged — else None.
+    Keys are resolved by exprId, not by name: a key produced by an
+    Alias (``select(col("other").alias("k"))`` over a file that has its
+    own ``k``) is a new attribute and is never probed. Used to gate the
+    'auto' probe so it never re-executes derived upstream compute
+    (joins, aggregates, Python stages) just to pick a topology.
     """
     try:
         root = df._jdf.queryExecution().optimizedPlan()
@@ -212,19 +251,24 @@ def _scan_files_for_keys(df: DataFrame, keys: list[str]) -> list[str] | None:
             "Repartition",
             "RepartitionByExpression",
         }
+        scanned = set()
         stack = [root]
         while stack:
             node = stack.pop()
-            ch = node.children()
-            n_ch = ch.size()
-            if n_ch == 0:
+            ch = _java_seq(node.children())
+            if not ch:
                 if node.nodeName() != "LogicalRelation":
                     return None
+                scanned.update(
+                    a.exprId().id() for a in _java_seq(node.output())
+                )
                 continue
             if node.nodeName() not in allowed:
                 return None
-            for i in range(n_ch):
-                stack.append(ch.apply(i))
+            stack.extend(ch)
+        out = {a.name(): a.exprId().id() for a in _java_seq(root.output())}
+        if not all(out.get(k) in scanned for k in keys):
+            return None
         files = sorted(df.inputFiles())
     except Exception:  # pragma: no cover — Connect / exotic plans
         return None
@@ -244,6 +288,8 @@ def _scan_files_for_keys(df: DataFrame, keys: list[str]) -> list[str] | None:
         names = set(pq.ParquetFile(paths[0]).schema_arrow.names)
     except Exception:
         return None
+    # a scanned key can still be absent from the files (a directory
+    # partition column): not probed
     if not all(k in names for k in keys):
         return None
     return paths
@@ -258,6 +304,14 @@ def _auto_method(df: DataFrame, keys: list[str]) -> str:
     stats — falls back to 'combine', the safe-everywhere topology.
     Correctness does not ride on the choice: both branches emit one
     sketch per group built from exactly that group's values.
+
+    Known bias: the sample is the head of the first file, so on
+    key-sorted or key-partitioned layouts it is not a random sample.
+    A file sorted by a key with large groups can show one giant group
+    (combine, where repartition might win), and a file whose head holds
+    only the small groups of a skewed key can show tiny groups that the
+    whole table does not have (repartition, where combine might win).
+    Either misread costs speed, not accuracy.
     """
     paths = _scan_files_for_keys(df, keys)
     if paths is None:
@@ -290,12 +344,47 @@ def _auto_method(df: DataFrame, keys: list[str]) -> str:
     return "combine"
 
 
+# Input bytes per reduce task of the single pass: Spark's default scan
+# split size, so the pass runs about one task per input split.
+_SINGLE_PASS_BYTES_PER_TASK = 128 << 20
+
+
+def _single_pass_partitions(df: DataFrame, keys: list[str]) -> int | None:
+    """Reduce-task count for the 'repartition' topology's raw-row
+    shuffle: one task per ``_SINGLE_PASS_BYTES_PER_TASK`` of input
+    files, at least one per core, at most ``spark.sql.shuffle.partitions``
+    — or None (let Spark size the exchange) when the input is not a
+    plain parquet scan or the conf is not a number.
+
+    Every Python task pays a fixed start cost (measured ~0.25 s per
+    wave of tasks on local[4], whatever the rows), so a small input
+    spread over the conf's width pays it once per wave: under Spark's
+    default 200 partitions on 4 cores the single pass took 11.9 s where
+    combine, whose merge stage AQE coalesces, took 1.35 s. AQE's own
+    byte-based coalescing goes the other way, onto 1-3 tasks that
+    serialize the Python build (measured: 3 tasks / 0.65 s serial at
+    sf0.1 on 32 cores). One wave of tasks, more only as the input
+    grows, keeps each task's in-memory partition near the input split
+    size, as combine's map side is, unless the conf caps the width
+    lower."""
+    width = _shuffle_partitions(df.sparkSession)
+    paths = _scan_files_for_keys(df, keys)
+    if width is None or paths is None:
+        return None
+    try:
+        par = df.sparkSession.sparkContext.defaultParallelism
+        size = sum(os.path.getsize(p) for p in paths)
+    except Exception:  # pragma: no cover — Connect / vanished file
+        return None
+    return min(width, max(par, -(-size // _SINGLE_PASS_BYTES_PER_TASK)))
+
+
 def sketch_by_key(
     df: DataFrame,
     keys: list[str],
     value: Column | str,
     factory: SketchFactory,
-    method: str = "combine",
+    method: str = "auto",
     salt_partitions: int = 16,
     salt_col: Column | None = None,
     out_col: str = "sketch",
@@ -307,9 +396,14 @@ def sketch_by_key(
     Returns DataFrame[keys..., out_col binary]. See module docstring for
     the shuffle topologies (``combine`` / ``salted`` / ``clustered`` /
     ``repartition`` — an explicit hash-repartition by ``keys`` followed
-    by the clustered single pass, correct on ANY input — and ``auto``,
-    which picks combine vs repartition from a first-batch key sample,
-    see :func:`_auto_method`).
+    by the clustered single pass, correct on ANY input). The default,
+    ``auto``, lets the input pick: a first-batch key sample
+    (:func:`_auto_method`) takes ``repartition`` when it sees tiny
+    groups — there the map-side "partial" is just the raw values, so
+    combine's blob shuffle and second Python pass buy nothing — and
+    ``combine`` otherwise, which also covers every input the probe
+    cannot read cheaply. Either way each group's sketch is built from
+    exactly its values, so the choice moves speed, never the bound.
 
     ``post`` (with ``post_fields``, the StructFields it appends after
     dropping ``out_col``): estimate-extraction fused INTO the final
@@ -330,16 +424,16 @@ def sketch_by_key(
         # ONE shuffle of the narrow (keys, value) projection, ONE
         # Python crossing, ONE sketch build per group — vs combine's
         # blob shuffle + double build, which loses in the tiny-group
-        # regime (see _auto_method). Explicit partition count: the
-        # post-shuffle build stage is Python-compute-heavy, and AQE's
-        # byte-based coalescing (1 MB floor) would serialize a few-MB
-        # shuffle onto 2-3 tasks (measured: 3 tasks / 0.65 s serial at
-        # sf0.1); the session's shuffle-partition setting is already
-        # the deploy-parameterized answer for "how many reduce slots".
-        n_part = int(
-            proj.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        # regime (see _auto_method). Width: _single_pass_partitions.
+        # Input already hash-partitioned by keys at the resulting width
+        # (a Window.partitionBy(keys) output) keeps its partitioning
+        # and Spark drops this exchange.
+        n_part = _single_pass_partitions(df, list(keys))
+        proj = (
+            proj.repartition(n_part, *keys)
+            if n_part
+            else proj.repartition(*keys)
         )
-        proj = proj.repartition(n_part, *keys)
         method = "clustered"
     multi = len(vnames) > 1
     out_schema = StructType(
@@ -687,7 +781,7 @@ def sketch_quantiles_by_key(
     value: Column | str,
     factory: SketchFactory,
     qs: list[float],
-    method: str = "combine",
+    method: str = "auto",
     prefix: str = "p",
 ) -> DataFrame:
     """Fused ``sketch_by_key`` + ``with_quantiles``: per-group quantile

@@ -52,7 +52,7 @@ def grouped_quantiles(
     value: Column | str,
     qs: list[float],
     delta: int = 200,
-    method: str = "combine",
+    method: str = "auto",
 ) -> DataFrame:
     """Per-group approximate quantiles; one row per group.
 
@@ -61,15 +61,17 @@ def grouped_quantiles(
     sketch_by_key → with_quantiles form, one fewer JVM↔Python round
     trip of the merged blob frame (round-7 optimization, guide §4).
 
-    ``method='repartition'`` (round-7): for tiny-group inputs (the
-    per-conversation regime, a few rows per key over 10^5+ keys) one
-    raw-row shuffle + a single clustered build pass replaces the blob
-    shuffle + double build — measured at sf1.0: −24 % shuffle bytes,
-    −28 % executor run time, wall-neutral on this host (the saved work
-    sits off the critical path locally; on byte-constrained clusters
-    the shuffle saving is the win). ``method='auto'`` probes a
-    first-batch key sample to pick it automatically; 'combine' stays
-    the default so the measured bench topologies are unchanged."""
+    The default ``method='auto'`` picks the topology from a first-batch
+    key sample (agg._auto_method). Tiny-group inputs (the
+    per-conversation regime, a few rows per key over 10^5+ keys) take
+    ``'repartition'``: one raw-row shuffle + a single clustered build
+    pass replaces the blob shuffle + double build (sf0.05 on 4 cores:
+    0.98 → 0.68 s per call by conv_id; sf1.0 on 32 cores: −24 %
+    shuffle bytes). Few-group keys (e.g. ``role``) and inputs
+    the probe cannot read cheaply keep ``'combine'``. Each group's
+    digest is built from exactly its values either way, so every
+    topology keeps the t-digest rank bound; pass ``method=`` to pin
+    one."""
     return sketch_quantiles_by_key(
         df, keys, value, lambda: TDigest(delta), qs, method=method
     )
@@ -132,10 +134,22 @@ def grouped_latency_quantiles(
     """Per-conversation latency quantiles: one t-digest per conv_id over
     its inter-turn deltas (north-star per-group variant). Uses the
     tiny-group bulk builder; conversations with < min_turns turns have
-    no deltas and are absent."""
+    no deltas and are absent.
+
+    The lag window already hash-partitions the rows by conv_id, which
+    is the co-location the single-pass build needs: the 'repartition'
+    topology's exchange matches the window's and Spark drops it, so the
+    plan holds one Exchange and one Python node (vs two of each under
+    'combine'), with the same rows — every conversation's deltas reach
+    the build in one partition under both topologies."""
     lat = interturn_latency_seconds(transcripts)
     return sketch_quantiles_by_key(
-        lat, ["conv_id"], "latency_s", lambda: TDigest(delta), list(qs)
+        lat,
+        ["conv_id"],
+        "latency_s",
+        lambda: TDigest(delta),
+        list(qs),
+        method="repartition",
     )
 
 
@@ -262,7 +276,7 @@ def sketch_cube(
     value: Column | str,
     factory,
     grouping_sets: list[tuple] | None = None,
-    method: str = "combine",
+    method: str = "auto",
 ) -> DataFrame:
     """Re-aggregatable SKETCH CUBE: scan the fact table ONCE to build
     leaf sketches at the finest grain (the full ``dims`` tuple), then
@@ -355,7 +369,7 @@ def sketch_cube_scope(
     value: Column | str,
     factory,
     grouping_sets: list[tuple] | None = None,
-    method: str = "combine",
+    method: str = "auto",
 ):
     """Context-manager form of :func:`sketch_cube` with guaranteed
     leaf-cache cleanup (same contract as
@@ -416,7 +430,7 @@ def sliding_window_sketches(
     factory,
     window_days: int,
     slide_days: int,
-    method: str = "combine",
+    method: str = "auto",
     keys: list[str] | None = None,
 ) -> DataFrame:
     """PANE-MERGED sliding event-time windows: each fact row is
@@ -1221,7 +1235,7 @@ def grouped_quantiles_kll(
     value: Column | str,
     qs: list[float],
     k: int = 200,
-    method: str = "combine",
+    method: str = "auto",
 ) -> DataFrame:
     """Per-group KLL quantiles (rank-error flavor of grouped_quantiles);
     mass extraction is vectorized via KLL.quantile_blobs and fused into
@@ -1283,7 +1297,7 @@ def grouped_quantiles_dd(
     value: Column | str,
     qs: list[float],
     alpha: float = 0.01,
-    method: str = "combine",
+    method: str = "auto",
 ) -> DataFrame:
     """Per-group relative-error quantiles (DDSketch flavor of
     grouped_quantiles). Because the merge is bit-exact, every topology
@@ -2110,7 +2124,7 @@ def grouped_priority_sample(
     id_col: Column | str,
     weight: Column | str,
     k: int = 256,
-    method: str = "combine",
+    method: str = "auto",
 ) -> DataFrame:
     """Per-group priority samples → DataFrame[keys..., sketch binary]:
     a bounded stratified sample (k rows per stratum) whose per-group
