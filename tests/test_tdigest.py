@@ -214,3 +214,49 @@ def test_quantile_blobs_matches_per_blob():
             assert np.all(np.isnan(got))
         else:
             np.testing.assert_allclose(got, ref, rtol=1e-9, atol=1e-12)
+
+
+def _midrank_error(data_sorted: np.ndarray, estimate: float, q: float) -> float:
+    """Rank error where an estimate strictly between two adjacent data
+    values holds the ranks between their mid-ranks (where interpolating
+    across unit centroids places it)."""
+    n = len(data_sorted)
+    lo = int(np.searchsorted(data_sorted, estimate, side="left"))
+    hi = int(np.searchsorted(data_sorted, estimate, side="right"))
+    qlo, qhi = lo / n, hi / n
+    if lo == hi and 0 < lo < n:
+        qlo, qhi = (lo - 0.5) / n, (lo + 0.5) / n
+    if qlo <= q <= qhi:
+        return 0.0
+    return min(abs(qlo - q), abs(qhi - q))
+
+
+def test_from_sorted_small_group_within_one_rank():
+    """A group of a few hundred values, built in one pass, stays within
+    max(bound, one rank) at q = 0.95. Before the chunk rule this
+    460-latency group put q = 0.95 inside a 3-value k1 centroid and
+    landed 1.5 ranks off."""
+    vals = np.sort(np.random.default_rng(176).exponential(45.0, 460))
+    td = TDigest.from_sorted(vals, DELTA)
+    err = _midrank_error(vals, float(td.quantile(0.95)), 0.95)
+    assert err <= max(bound(0.95), 1.0 / vals.size)
+
+
+@pytest.mark.parametrize("n", [101, 150, 250, 460, 1000, 2000, 20_000])
+def test_from_sorted_groups_within_bound(n):
+    """i.i.d. continuous groups (latency-like exponential, skewed
+    lognormal) over the sizes where the k1 grid starts to merge values:
+    every q within max(bound, one rank), with a centroid count that
+    stays under delta. Tied integer values are left out: an atom wider
+    than the bound floors the rank error of any interpolating estimator
+    (see the ``integers`` case of test_accuracy_bound)."""
+    rng = np.random.default_rng(n)
+    for _ in range(40 if n <= 2000 else 4):
+        for vals in (rng.exponential(45.0, n), rng.lognormal(5, 1, n)):
+            vals = np.sort(vals)
+            td = TDigest.from_sorted(vals, DELTA)
+            assert td.means.size <= DELTA
+            assert td.count == n and td.weights.sum() == n
+            for q in QS:
+                err = _midrank_error(vals, float(td.quantile(q)), q)
+                assert err <= max(bound(q), 1.0 / n) + 1e-12, (n, q, err)

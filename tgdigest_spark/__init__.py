@@ -16,4 +16,11 @@ plans       incremental per-partition sketch checkpoints + lineage
 streaming   structured-streaming sketch maintenance
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+if "pyspark.worker_util" in _sys.modules:  # imported inside a Python worker
+    from . import _worker
+
+    _worker.install()

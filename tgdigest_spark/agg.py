@@ -56,6 +56,12 @@ exercised locally on local[N]):
 
 All data movement is Arrow-batched; sketch updates are numpy-vectorized
 (see sketches/). No per-row Python anywhere.
+
+The builders that start engine kernels (``sketch_column``,
+``sketch_by_key``, ``merge_blobs_by_key``) ship the package to the
+executors on first use per SparkContext (``pyfiles.ensure_shipped``):
+the kernels unpickle through ``tgdigest_spark``, which a driver started
+outside the source tree would otherwise leave unimportable there.
 """
 
 from __future__ import annotations
@@ -68,6 +74,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
+from .pyfiles import ensure_shipped
 from .sketches.base import Sketch
 
 SketchFactory = Callable[[], Sketch]
@@ -124,6 +131,7 @@ def sketch_column(
     small job pay a repartition+merge round it doesn't need; 512 blobs
     of a few KB are nothing to a driver, while a 100k-partition scan
     still triggers the bounded Spark-side reduction."""
+    ensure_shipped(df.sparkSession)
     vnames, vals = _value_projection(df, value, [])
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -356,17 +364,19 @@ def _single_pass_partitions(df: DataFrame, keys: list[str]) -> int | None:
     — or None (let Spark size the exchange) when the input is not a
     plain parquet scan or the conf is not a number.
 
-    Every Python task pays a fixed start cost (measured ~0.25 s per
-    wave of tasks on local[4], whatever the rows), so a small input
-    spread over the conf's width pays it once per wave: under Spark's
-    default 200 partitions on 4 cores the single pass took 11.9 s where
-    combine, whose merge stage AQE coalesces, took 1.35 s. AQE's own
-    byte-based coalescing goes the other way, onto 1-3 tasks that
-    serialize the Python build (measured: 3 tasks / 0.65 s serial at
-    sf0.1 on 32 cores). One wave of tasks, more only as the input
-    grows, keeps each task's in-memory partition near the input split
-    size, as combine's map side is, unless the conf caps the width
-    lower."""
+    Every Python task pays a fixed start cost, whatever its rows:
+    about 0.06 s per wave of tasks on local[4] with the worker's
+    per-task import-cache reset skipped (``tgdigest_spark._worker``),
+    0.16 s without (identity stage of 4-32 tasks, median of 7), so a
+    small input spread over the conf's width pays it once per wave:
+    under Spark's default 200 partitions on 4 cores the single pass
+    took 11.9 s (before that skip) where combine, whose merge stage
+    AQE coalesces, took 1.35 s. AQE's own byte-based coalescing goes
+    the other way, onto 1-3 tasks that serialize the Python build
+    (measured: 3 tasks / 0.65 s serial at sf0.1 on 32 cores). One wave
+    of tasks, more only as the input grows, keeps each task's in-memory
+    partition near the input split size, as combine's map side is,
+    unless the conf caps the width lower."""
     width = _shuffle_partitions(df.sparkSession)
     paths = _scan_files_for_keys(df, keys)
     if width is None or paths is None:
@@ -416,6 +426,7 @@ def sketch_by_key(
     rows: ``post`` is applied to each merged pandas frame in the same
     task that produced it.
     """
+    ensure_shipped(df.sparkSession)
     if method == "auto":
         method = _auto_method(df, list(keys))
     vnames, proj = _value_projection(df, value, keys)
@@ -847,6 +858,7 @@ def merge_blobs_by_key(
     two-level tree is exact: identical registers/centroids to a
     sequential fold.
     """
+    ensure_shipped(blobs.sparkSession)
     proto = factory()
     merge_bulk = getattr(proto, "merge_blob_groups_like", None)
     schema = StructType(

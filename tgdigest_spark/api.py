@@ -1372,15 +1372,6 @@ def kmv_sketch(
     )
 
 
-def distinct_count_kmv(
-    df: DataFrame, value: Column | str, k: int = 1024,
-    where: Column | None = None,
-) -> float:
-    """COUNT(DISTINCT value) via KMV: exact below k, (k-1)/U_(k)
-    estimator (rel std err ~ 1/sqrt(k-2)) above."""
-    return kmv_sketch(df, value, k, where).estimate()
-
-
 def distinct_overlap(
     df_a: DataFrame,
     df_b: DataFrame,

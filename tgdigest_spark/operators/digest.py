@@ -92,12 +92,6 @@ def top_posts(
     )
 
 
-def select_rank(top: DataFrame, metric: str, index: int) -> DataFrame:
-    """T5 — the i-th (1-based) ranked post for one metric
-    (workers/cards.rs:36-38)."""
-    return top.where((F.col("metric") == metric) & (F.col("rank") == index))
-
-
 def slim_cards(top: DataFrame) -> DataFrame:
     """P4 — digest JSON projection: [id, count] pairs with null→0,
     null-count cards dropped (workers/digest.rs:31-50 +

@@ -9,6 +9,7 @@ closures that reference the package, regardless of the driver's cwd.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -20,11 +21,15 @@ _SENT = "_tgdigest_pyfiles_shipped"
 def build_zip(out_path: str | None = None) -> str:
     """Zip the package (source only) for --py-files / addPyFile."""
     if out_path is None:
-        # per-user default name: a shared-tempdir path collides across
-        # users on one host (the first user's file blocks the others)
+        # per-user, per-source-tree default name: a shared-tempdir path
+        # collides across users on one host (the first user's file
+        # blocks the others), and two checkouts sharing one name would
+        # ship whichever tree zipped last (the mtime check below only
+        # compares against the caller's own tree)
         uid = os.getuid() if hasattr(os, "getuid") else "u"
+        tree = hashlib.sha1(_PKG_DIR.encode()).hexdigest()[:10]
         out_path = os.path.join(
-            tempfile.gettempdir(), f"tgdigest_spark-{uid}.zip"
+            tempfile.gettempdir(), f"tgdigest_spark-{uid}-{tree}.zip"
         )
     src_mtime = max(
         os.path.getmtime(os.path.join(root, f))
@@ -60,7 +65,10 @@ def build_zip(out_path: str | None = None) -> str:
 
 def ensure_shipped(spark) -> None:
     """Idempotently make the package importable on executors."""
-    sc = spark.sparkContext
+    try:
+        sc = spark.sparkContext
+    except Exception:  # pragma: no cover — Spark Connect: no SparkContext
+        return
     if getattr(sc, _SENT, False):
         return
     if not os.path.isdir(_PKG_DIR):

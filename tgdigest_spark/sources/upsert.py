@@ -1,4 +1,4 @@
-"""Idempotent upsert sinks over parquet (the S5/S6/S7 operators).
+"""Idempotent upsert sinks over parquet (the S5/S6 operators).
 
 The reference upserts fetched batches by primary key into SQLite
 (`INSERT OR REPLACE`, /root/reference/src/cache.rs:322-339) and
@@ -107,21 +107,6 @@ def merge_bounds(
     merged.write.mode("overwrite").parquet(tmp)
     _atomic_swap(tmp, bounds_path)
     return spark.read.parquet(bounds_path)
-
-
-def touch_fetched_at(
-    spark, target_dir: str, where, fetched_at_value
-) -> None:
-    """S7 — metadata touch: UPDATE fetched_at over a predicate
-    (cache.rs:343-354), emulated as projected rewrite."""
-    current = spark.read.parquet(target_dir)
-    updated = current.withColumn(
-        "fetched_at",
-        F.when(where, F.lit(fetched_at_value)).otherwise(F.col("fetched_at")),
-    )
-    tmp = target_dir + f".tmp-{uuid.uuid4().hex[:8]}"
-    updated.write.mode("overwrite").parquet(tmp)
-    _atomic_swap(tmp, target_dir)
 
 
 def merge_into_iceberg(
