@@ -15,6 +15,7 @@ that shuffle once at write time; these tests pin the three guarantees:
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -154,3 +155,79 @@ def test_register_bucketed_table_roundtrip(
         assert "Exchange" not in _plan(interturn_latency_seconds(df))
     finally:
         spark.sql("DROP TABLE IF EXISTS t_rt")
+
+
+@pytest.fixture(scope="module")
+def bucketed6(spark, transcripts, tmp_path_factory):
+    """Six buckets: a width the single pass would not pick on its own
+    (one task per core), so a zero-Exchange plan shows that the bucket
+    count was read from the scan."""
+    from tgdigest_spark.sources.transcripts import (
+        read_transcripts_bucketed,
+        write_transcripts_bucketed,
+    )
+
+    assert spark.sparkContext.defaultParallelism != 6
+    path = str(tmp_path_factory.mktemp("bucketed6") / "transcripts_b6")
+    write_transcripts_bucketed(transcripts, "transcripts_b6", n_buckets=6, path=path)
+    df = read_transcripts_bucketed(spark, "transcripts_b6")
+    yield df
+    spark.sql("DROP TABLE IF EXISTS transcripts_b6")
+    spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+
+
+def test_single_pass_reads_bucket_width(spark, transcripts, bucketed6):
+    from tgdigest_spark.agg import _auto_method, _plan_facts, _single_pass_partitions
+
+    assert _plan_facts(bucketed6, ["conv_id"]).bucket_width == 6
+    assert _single_pass_partitions(bucketed6, ["conv_id"]) == 6
+    # co-located input takes the single pass whatever the group sizes
+    assert _auto_method(bucketed6, ["conv_id"]) == "repartition"
+    assert _plan_facts(bucketed6, ["role"]).bucket_width is None
+    assert _plan_facts(transcripts, ["conv_id"]).bucket_width is None
+
+
+def test_per_conversation_ops_plan_no_exchange_over_bucketed(
+    spark, transcripts, bucketed6, monkeypatch
+):
+    """The by-conversation quantiles and both latency ops run on the
+    buckets as they are: no Exchange, same rows as the plain layout."""
+    from tgdigest_spark import api
+
+    seen = []
+    real = api._tree_merge
+
+    def spy(partials, factory, fanout):
+        seen.append(partials)
+        return real(partials, factory, fanout)
+
+    monkeypatch.setattr(api, "_tree_merge", spy)
+    length = F.length("text").cast("double")
+    qs = [0.5, 0.95]
+
+    def by_conv(df):
+        return sorted(df.collect(), key=lambda r: r.conv_id)
+
+    for run in (
+        lambda t: api.grouped_quantiles(t, ["conv_id"], length, qs),
+        lambda t: api.grouped_quantiles_kll(t, ["conv_id"], length, qs),
+        lambda t: api.grouped_latency_quantiles(t, qs),
+    ):
+        got = run(bucketed6)
+        assert "Exchange" not in _plan(got)
+        assert by_conv(got) == by_conv(run(transcripts))
+
+    bucketed_q = api.latency_quantiles(bucketed6, qs)
+    assert "Exchange" not in _plan(seen[-1])
+    plain_q = api.latency_quantiles(transcripts, qs)
+    lat = np.sort(
+        np.array(
+            [r.latency_s for r in api.interturn_latency_seconds(transcripts).collect()]
+        )
+    )
+    for q in qs:
+        for est in (bucketed_q[q], plain_q[q]):
+            lo = np.searchsorted(lat, est, "left") / lat.size
+            hi = np.searchsorted(lat, est, "right") / lat.size
+            err = 0.0 if lo <= q <= hi else min(abs(lo - q), abs(hi - q))
+            assert err <= max(8 * q * (1 - q) / 200, 1e-3, 1 / lat.size), (q, est)

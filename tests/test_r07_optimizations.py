@@ -495,7 +495,7 @@ class TestRepartitionTopology:
         name: the probe must not sample the file's own ``k``."""
         import pandas as pd
 
-        from tgdigest_spark.agg import _auto_method, _scan_files_for_keys
+        from tgdigest_spark.agg import _auto_method, _plan_facts
 
         n = 8192
         path = str(tmp_path / "alias.parquet")
@@ -510,7 +510,7 @@ class TestRepartitionTopology:
         assert _auto_method(df, ["k"]) == "repartition"
         assert _auto_method(df.select("k", "v"), ["k"]) == "repartition"
         aliased = df.select(F.col("other").alias("k"), "v")
-        assert _scan_files_for_keys(aliased, ["k"]) is None
+        assert _plan_facts(aliased, ["k"]).files is None
         assert _auto_method(aliased, ["k"]) == "combine"
 
 

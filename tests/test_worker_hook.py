@@ -132,7 +132,7 @@ def test_pyfile_added_after_install_still_imports(spark, tmp_path, kind):
 _FOREIGN_CWD_SCRIPT = """
 import sys
 sys.path.insert(0, {repo!r})
-from tgdigest_spark import agg
+from tgdigest_spark import agg, api
 from tgdigest_spark.session import get_spark
 from tgdigest_spark.sketches.tdigest import TDigest
 
@@ -156,14 +156,39 @@ blobs = spark.createDataFrame([(1, blob), (1, blob)], "k int, sketch binary")
 rows = agg.merge_blobs_by_key(blobs, ["k"], TDigest).collect()
 assert TDigest.deserialize(bytes(rows[0]["sketch"])).count == 4
 spark.stop()
+
+def turns(spark):
+    return spark.range(90).selectExpr(
+        "CAST(id % 3 AS STRING) AS conv_id",
+        "CAST(id AS INT) AS turn_idx",
+        "timestamp_seconds(id * id) AS ts",
+    )
+
+spark = session()
+q = api.latency_quantiles(turns(spark), [0.5])
+assert q[0.5] > 0, q
+spark.stop()
+
+spark = session()
+rows = api.grouped_latency_quantiles(turns(spark), [0.5]).collect()
+assert len(rows) == 3, rows
+spark.stop()
+
+spark = session()
+rows = api.grouped_quantiles(
+    turns(spark), ["conv_id"], "turn_idx", [0.5], method="repartition"
+).collect()
+assert sorted(r["p50"] for r in rows) == [43.5, 44.5, 45.5], rows
+spark.stop()
 print("OK")
 """
 
 
 def test_builders_ship_the_package_from_a_foreign_cwd(tmp_path):
     """Called from outside the repo without ``ensure_shipped``, each
-    engine builder ships the package itself; executors used to raise
-    ModuleNotFoundError: tgdigest_spark."""
+    engine builder ships the package itself, and so do the latency ops
+    and the single-pass quantiles, which start their own kernels;
+    executors used to raise ModuleNotFoundError: tgdigest_spark."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     proc = subprocess.run(

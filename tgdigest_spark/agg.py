@@ -13,18 +13,21 @@ exercised locally on local[N]):
 
 * **Per-key sketch** (one sketch per group, e.g. per conv_id):
   - ``method='auto'`` (default): the input picks between ``combine``
-    and ``repartition``. A first-batch sample of the key columns
+    and ``repartition``. A scan already hash-partitioned by the keys (a
+    bucketed table) takes ``repartition``, which then plans no
+    Exchange. Otherwise a first-batch sample of the key columns
     (:func:`_auto_method`, tens of ms) takes ``repartition`` for the
     tiny-group regime (a few rows per key over many keys, e.g. per
     conversation) and ``combine`` for everything else, including any
     input it cannot cheaply sample (derived plans, aliased keys,
-    non-parquet files). The choice moves speed only, never the bound:
-    both branches build each group's sketch from exactly that group's
-    values, and a sketch built in one pass carries the same published
-    error bound as any merge tree of partials (Agarwal et al.,
-    "Mergeable Summaries", PODS 2012). Register-style and linear
-    sketches (HLL, count-min, DDSketch) and KLL groups of at most k
-    values come out bit-identical; t-digest centroids may differ
+    non-parquet files). The plan facts both rules read are looked up
+    once per call (:func:`_plan_facts`). The choice moves speed only,
+    never the bound: both branches build each group's sketch from
+    exactly that group's values, and a sketch built in one pass carries
+    the same published error bound as any merge tree of partials
+    (Agarwal et al., "Mergeable Summaries", PODS 2012). Register-style
+    and linear sketches (HLL, count-min, DDSketch) and KLL groups of at
+    most k values come out bit-identical; t-digest centroids may differ
     within the digest's rank bound.
   - ``method='combine'``: map-side partial per (partition, key) via
     pandas groupby inside ``mapInPandas``, then ONE shuffle of small
@@ -36,11 +39,12 @@ exercised locally on local[N]):
   - ``method='repartition'``: ONE hash shuffle of the raw (keys,
     value) projection, then the ``clustered`` single pass. A parquet
     scan is shuffled onto one wave of tasks (one per core, more as the
-    input grows, see :func:`_single_pass_partitions`); any other input
-    at the session's shuffle width, so when it is already
-    hash-partitioned by the keys (e.g. the output of a
-    ``Window.partitionBy(keys)``) Spark drops the repartition and the
-    plan holds one Exchange.
+    input grows, see :func:`_single_pass_partitions`); a scan bucketed
+    by the keys keeps its bucket count, and any other input takes the
+    session's shuffle width. Input already hash-partitioned by the keys
+    at that width (a bucketed scan, or the output of a
+    ``Window.partitionBy(keys)``) keeps its partitioning and Spark drops
+    the repartition.
   - ``method='salted'``: explicit two-stage salted repartitioning
     (north_rule): groupBy(key, salt=pmod(xxhash64(salt_col), S)) →
     partial → groupBy(key) → merge. Use when per-partition key
@@ -52,24 +56,30 @@ exercised locally on local[N]):
     final answer, so the blob shuffle + merge stage is dropped
     entirely. Caller contract: every row of a key must live in ONE
     input partition; violating it yields one row per (key, partition
-    touched) instead of per key.
+    touched) instead of per key. Under :func:`sketch_quantiles_by_key`
+    with a sketch that has ``quantile_sorted_groups_like`` (t-digest,
+    KLL), the pass does not even build blobs: it answers the quantiles
+    from the sorted group segments it holds, the same numbers as
+    serializing each group and reading the blob back.
 
 All data movement is Arrow-batched; sketch updates are numpy-vectorized
 (see sketches/). No per-row Python anywhere.
 
 The builders that start engine kernels (``sketch_column``,
-``sketch_by_key``, ``merge_blobs_by_key``) ship the package to the
-executors on first use per SparkContext (``pyfiles.ensure_shipped``):
+``sketch_by_key``, ``merge_blobs_by_key``, and the latency ops'
+``api._latency_pass``) ship the package to the executors on first use
+per SparkContext (``pyfiles.ensure_shipped``):
 the kernels unpickle through ``tgdigest_spark``, which a driver started
 outside the source tree would otherwise leave unimportable there.
 """
 
 from __future__ import annotations
 
-import functools
 import os
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
@@ -241,18 +251,36 @@ def _java_seq(seq) -> list:
     return [seq.apply(i) for i in range(seq.size())]
 
 
-def _scan_files_for_keys(df: DataFrame, keys: list[str]) -> list[str] | None:
-    """The parquet files behind ``df`` IF its optimized plan is a pure
-    scan chain (Project/Filter/Repartition over one file relation) and
-    every key is a scanned column passed through unchanged — else None.
-    Keys are resolved by exprId, not by name: a key produced by an
-    Alias (``select(col("other").alias("k"))`` over a file that has its
-    own ``k``) is a new attribute and is never probed. Used to gate the
-    'auto' probe so it never re-executes derived upstream compute
-    (joins, aggregates, Python stages) just to pick a topology.
+class _PlanFacts(NamedTuple):
+    """What ``df``'s plans say about a per-key build, looked up ONCE per
+    call (:func:`_plan_facts`) and handed to the topology rules.
+
+    * ``files``: the parquet files behind ``df`` if its optimized plan
+      is a pure scan chain and every key is a scanned column passed
+      through unchanged, else None.
+    * ``bucket_width``: N when that scan reports
+      ``HashPartitioning(keys, N)`` — a table bucketed by exactly the
+      keys, read with a bucketed scan — else None.
     """
+
+    files: list[str] | None
+    bucket_width: int | None
+
+
+def _plan_facts(df: DataFrame, keys: list[str]) -> _PlanFacts:
+    """One walk of ``df``'s optimized plan (Project/Filter/Repartition
+    over one file relation) plus, only for a bucketed relation, one
+    look at its physical output partitioning. Keys are resolved by
+    exprId, not by name: a key produced by an Alias
+    (``select(col("other").alias("k"))`` over a file that has its own
+    ``k``) is a new attribute and is never probed. Gates the 'auto'
+    probe so it never re-executes derived upstream compute (joins,
+    aggregates, Python stages) just to pick a topology.
+    """
+    unknown = _PlanFacts(None, None)
     try:
-        root = df._jdf.queryExecution().optimizedPlan()
+        qe = df._jdf.queryExecution()
+        root = qe.optimizedPlan()
         allowed = {
             "Project",
             "Filter",
@@ -260,52 +288,75 @@ def _scan_files_for_keys(df: DataFrame, keys: list[str]) -> list[str] | None:
             "RepartitionByExpression",
         }
         scanned = set()
+        bucketed = False
         stack = [root]
         while stack:
             node = stack.pop()
             ch = _java_seq(node.children())
             if not ch:
                 if node.nodeName() != "LogicalRelation":
-                    return None
+                    return unknown
                 scanned.update(
                     a.exprId().id() for a in _java_seq(node.output())
                 )
+                bucketed = bucketed or node.relation().bucketSpec().isDefined()
                 continue
             if node.nodeName() not in allowed:
-                return None
+                return unknown
             stack.extend(ch)
         out = {a.name(): a.exprId().id() for a in _java_seq(root.output())}
-        if not all(out.get(k) in scanned for k in keys):
-            return None
+        key_ids = [out.get(k) for k in keys]
+        if not all(i in scanned for i in key_ids):
+            return unknown
         files = sorted(df.inputFiles())
+        width = _bucket_width(qe, key_ids) if bucketed else None
     except Exception:  # pragma: no cover — Connect / exotic plans
-        return None
+        return unknown
     if not files:
-        return None
+        return unknown
     from urllib.parse import unquote, urlparse
 
     paths = []
     for f in files:
         u = urlparse(f)
         if u.scheme not in ("file", "") or not u.path.endswith(".parquet"):
-            return None
+            return unknown
         paths.append(unquote(u.path))
     try:
         import pyarrow.parquet as pq
 
         names = set(pq.ParquetFile(paths[0]).schema_arrow.names)
     except Exception:
-        return None
+        return unknown
     # a scanned key can still be absent from the files (a directory
     # partition column): not probed
     if not all(k in names for k in keys):
+        return unknown
+    return _PlanFacts(paths, width)
+
+
+def _bucket_width(qe, key_ids: list) -> int | None:
+    """N when the physical plan reports ``HashPartitioning(keys, N)``
+    over exactly ``key_ids`` in order. Read from the physical plan, not
+    the table's bucket spec: Spark drops the bucketed scan when nothing
+    downstream needs it (``autoBucketedScan``), and then the scan no
+    longer co-locates the keys."""
+    part = qe.executedPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
         return None
-    return paths
+    exprs = _java_seq(part.expressions())
+    if [e.exprId().id() for e in exprs] != key_ids:
+        return None
+    return int(part.numPartitions())
 
 
-def _auto_method(df: DataFrame, keys: list[str]) -> str:
-    """'repartition' when a first-batch sample of the key column shows
-    the tiny-group regime (few rows per key, enough keys to fill the
+def _auto_method(
+    df: DataFrame, keys: list[str], facts: _PlanFacts | None = None
+) -> str:
+    """'repartition' when the scan is already hash-partitioned by the
+    keys (a bucketed table: the single pass then needs no exchange at
+    all) or when a first-batch sample of the key column shows the
+    tiny-group regime (few rows per key, enough keys to fill the
     cluster), else 'combine'. Reads ONE Arrow batch of the key columns
     straight from the first input file (~tens of ms, independent of
     row-group size); any doubt — derived input, remote files, missing
@@ -321,14 +372,16 @@ def _auto_method(df: DataFrame, keys: list[str]) -> str:
     whole table does not have (repartition, where combine might win).
     Either misread costs speed, not accuracy.
     """
-    paths = _scan_files_for_keys(df, keys)
-    if paths is None:
+    facts = facts or _plan_facts(df, keys)
+    if facts.bucket_width:
+        return "repartition"
+    if facts.files is None:
         return "combine"
     try:
         import pyarrow.parquet as pq
 
         batch = next(
-            pq.ParquetFile(paths[0]).iter_batches(
+            pq.ParquetFile(facts.files[0]).iter_batches(
                 batch_size=_AUTO_SAMPLE_ROWS, columns=list(keys)
             )
         )
@@ -357,12 +410,17 @@ def _auto_method(df: DataFrame, keys: list[str]) -> str:
 _SINGLE_PASS_BYTES_PER_TASK = 128 << 20
 
 
-def _single_pass_partitions(df: DataFrame, keys: list[str]) -> int | None:
+def _single_pass_partitions(
+    df: DataFrame, keys: list[str], facts: _PlanFacts | None = None
+) -> int | None:
     """Reduce-task count for the 'repartition' topology's raw-row
-    shuffle: one task per ``_SINGLE_PASS_BYTES_PER_TASK`` of input
-    files, at least one per core, at most ``spark.sql.shuffle.partitions``
-    — or None (let Spark size the exchange) when the input is not a
-    plain parquet scan or the conf is not a number.
+    shuffle: the bucket count when the scan is already hash-partitioned
+    by the keys (a repartition to exactly that partitioning plans no
+    Exchange); else one task per ``_SINGLE_PASS_BYTES_PER_TASK`` of
+    input files, at least one per core, at most
+    ``spark.sql.shuffle.partitions`` — or None (let Spark size the
+    exchange) when the input is not a plain parquet scan or the conf is
+    not a number.
 
     Every Python task pays a fixed start cost, whatever its rows:
     about 0.06 s per wave of tasks on local[4] with the worker's
@@ -377,16 +435,36 @@ def _single_pass_partitions(df: DataFrame, keys: list[str]) -> int | None:
     of tasks, more only as the input grows, keeps each task's in-memory
     partition near the input split size, as combine's map side is,
     unless the conf caps the width lower."""
+    facts = facts or _plan_facts(df, keys)
+    if facts.bucket_width:
+        return facts.bucket_width
     width = _shuffle_partitions(df.sparkSession)
-    paths = _scan_files_for_keys(df, keys)
-    if width is None or paths is None:
+    if width is None or facts.files is None:
         return None
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
-        size = sum(os.path.getsize(p) for p in paths)
+        size = sum(os.path.getsize(p) for p in facts.files)
     except Exception:  # pragma: no cover — Connect / vanished file
         return None
     return min(width, max(par, -(-size // _SINGLE_PASS_BYTES_PER_TASK)))
+
+
+def _sorted_segments(codes: np.ndarray, v: np.ndarray):
+    """``v`` ordered by (group code, value) with NaN dropped, plus each
+    group's segment ``[starts, ends)`` and code — the front half of the
+    per-key build kernels, which then serialize or query the segments
+    with a sketch's ``*_sorted_groups_like`` hooks."""
+    order = np.lexsort((v, codes))
+    codes_s, v_s = codes[order], v[order]
+    valid = ~np.isnan(v_s)
+    codes_v, v_v = codes_s[valid], v_s[valid]
+    if codes_v.size:
+        starts = np.flatnonzero(np.r_[True, codes_v[1:] != codes_v[:-1]])
+        ends = np.r_[starts[1:], codes_v.size]
+        seg_codes = codes_v[starts]
+    else:
+        starts = ends = seg_codes = np.empty(0, dtype=np.int64)
+    return v_v, starts, ends, seg_codes
 
 
 def sketch_by_key(
@@ -427,8 +505,11 @@ def sketch_by_key(
     task that produced it.
     """
     ensure_shipped(df.sparkSession)
+    facts = None
+    if method in ("auto", "repartition"):
+        facts = _plan_facts(df, list(keys))
     if method == "auto":
-        method = _auto_method(df, list(keys))
+        method = _auto_method(df, list(keys), facts)
     vnames, proj = _value_projection(df, value, keys)
     if method == "repartition":
         # co-locate every key's rows, then the clustered single pass:
@@ -438,8 +519,9 @@ def sketch_by_key(
         # regime (see _auto_method). Width: _single_pass_partitions.
         # Input already hash-partitioned by keys at the resulting width
         # (a Window.partitionBy(keys) output) keeps its partitioning
-        # and Spark drops this exchange.
-        n_part = _single_pass_partitions(df, list(keys))
+        # and Spark drops this exchange; so does a scan bucketed by the
+        # keys, whose bucket count is then the width.
+        n_part = _single_pass_partitions(df, list(keys), facts)
         proj = (
             proj.repartition(n_part, *keys)
             if n_part
@@ -479,6 +561,18 @@ def sketch_by_key(
         bulk = getattr(proto, "from_sorted_like", None)
         ser_bulk = getattr(proto, "serialize_sorted_groups_like", None)
         hashed_bulk = getattr(proto, "serialize_hashed_groups_like", None)
+        seg_quantiles = getattr(proto, "quantile_sorted_groups_like", None)
+        # the single pass's partition IS the final group set: under a
+        # quantile post it answers straight from the sorted segments,
+        # no blob serialized and parsed again in the same task
+        direct = (
+            method == "clustered"
+            and isinstance(post, _QuantileColumns)
+            and seg_quantiles is not None
+            and bulk is not None
+            and len(keys) == 1
+            and not multi
+        )
 
         def _bulk_hashed_partition(pdf: pd.DataFrame) -> pd.DataFrame:
             """Millions-of-tiny-groups fast path for HASH-domain
@@ -489,7 +583,6 @@ def sketch_by_key(
             object path at tiny group sizes (measured: 16 workers
             pinned for minutes on 6M (bucket, day) groups that the
             bulk path builds in seconds)."""
-            import numpy as np
 
             from .sketches.hashing import base_hash_full
 
@@ -535,28 +628,29 @@ def sketch_by_key(
             """Millions-of-tiny-groups fast path (single key column):
             the WHOLE partition in ONE factorize + lexsort + boundary
             pass, then blobs via the sketch's bulk serializer (no
-            per-group objects). Operating on the whole partition — not
-            per Arrow batch — matters: under random row order nearly
-            every group spans batches, and the per-batch variant paid
-            one sketch merge + recluster per group per extra batch
-            (measured 8x slower on 10^6 tiny groups)."""
-            import numpy as np
-
+            per-group objects) — or, for a ``direct`` single pass, the
+            quantile columns from the same sorted segments. Operating on
+            the whole partition — not per Arrow batch — matters: under
+            random row order nearly every group spans batches, and the
+            per-batch variant paid one sketch merge + recluster per
+            group per extra batch (measured 8x slower on 10^6 tiny
+            groups)."""
             k = keys[0]
             codes, uniq = pd.factorize(pdf[k], use_na_sentinel=False)
             v = pdf["v"].to_numpy(dtype=np.float64, na_value=np.nan)
-            order = np.lexsort((v, codes))
-            codes_s, v_s = codes[order], v[order]
-            valid = ~np.isnan(v_s)
-            codes_v, v_v = codes_s[valid], v_s[valid]
-            if codes_v.size:
-                starts = np.flatnonzero(
-                    np.r_[True, codes_v[1:] != codes_v[:-1]]
+            v_v, starts, ends, seg_codes = _sorted_segments(codes, v)
+            # groups whose values were all-null still get an (empty)
+            # sketch: a NaN answer, or one shared empty blob
+            missing = np.setdiff1d(np.arange(len(uniq)), seg_codes)
+            if direct:
+                none = np.zeros(missing.size, dtype=np.int64)
+                ests = seg_quantiles(
+                    v_v, np.r_[starts, none], np.r_[ends, none], post.qs
                 )
-                ends = np.r_[starts[1:], codes_v.size]
-                seg_codes = codes_v[starts]
-            else:
-                starts = ends = seg_codes = np.empty(0, dtype=np.int64)
+                data = {k: list(uniq.take(np.r_[seg_codes, missing]))}
+                for i, name in enumerate(post.names):
+                    data[name] = ests[:, i]
+                return pd.DataFrame(data)
             if ser_bulk is not None:
                 blobs = ser_bulk(v_v, starts, ends)
             else:
@@ -564,9 +658,6 @@ def sketch_by_key(
                     bulk(v_v[s:e]).serialize() for s, e in zip(starts, ends)
                 ]
             out_keys = list(uniq.take(seg_codes))
-            # groups whose values were all-null still get an (empty)
-            # sketch — one shared blob, they are all identical
-            missing = np.setdiff1d(np.arange(len(uniq)), seg_codes)
             if missing.size:
                 out_keys += list(uniq.take(missing))
                 blobs = list(blobs) + [factory().serialize()] * missing.size
@@ -629,8 +720,6 @@ def sketch_by_key(
                 # factorize + bincount instead of a pandas groupby
                 # transform: at 10^6+ blob rows per reducer the groupby
                 # was the stage's hot spot
-                import numpy as np
-
                 codes, uniq = pd.factorize(
                     allp[keys[0]], use_na_sentinel=False
                 )
@@ -687,6 +776,8 @@ def sketch_by_key(
             # combine is complete — no blob shuffle, no merge stage.
             if post is None:
                 return proj.mapInPandas(combine_partition, schema=out_schema)
+            if direct:
+                return proj.mapInPandas(combine_partition, schema=final_schema)
             return proj.mapInPandas(
                 lambda batches: _apply_post(combine_partition(batches)),
                 schema=final_schema,
@@ -735,35 +826,43 @@ def _quantile_names(qs: list[float], prefix: str = "p") -> list[str]:
     ]
 
 
-def _quantile_extractor(
-    factory: SketchFactory,
-    qs: list[float],
-    blob_col: str = "sketch",
-    prefix: str = "p",
-) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    """Per-frame quantile extraction shared by :func:`with_quantiles`
-    and the fused ``post`` hook of :func:`sketch_by_key` — ONE
-    definition so the fused and two-stage paths are the same code."""
-    deser = _deser(factory)
-    bulk = getattr(type(factory()), "quantile_blobs", None)
-    names = _quantile_names(qs, prefix)
+class _QuantileColumns:
+    """Blob frame → one double column per requested quantile: the body
+    of :func:`with_quantiles` and the ``post`` step that
+    :func:`sketch_quantiles_by_key` fuses into the final merge pass —
+    ONE definition so the fused and two-stage paths are the same code.
+    The single pass of :func:`sketch_by_key` recognizes it and, for a
+    sketch with ``quantile_sorted_groups_like``, answers ``qs`` from the
+    sorted group segments instead of from blobs (the same numbers: the
+    hook and ``quantile_blobs`` share one kernel)."""
 
-    def extract_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.drop(columns=[blob_col])
+    def __init__(self, factory: SketchFactory, qs, blob_col="sketch", prefix="p"):
+        self.cls = type(factory())
+        self.qs = list(qs)
+        self.names = _quantile_names(self.qs, prefix)
+        self.blob_col = blob_col
+
+    def fields(self) -> list[StructField]:
+        return [StructField(n, _double(), True) for n in self.names]
+
+    def __call__(self, pdf: pd.DataFrame) -> pd.DataFrame:
+        out = pdf.drop(columns=[self.blob_col])
+        bulk = getattr(self.cls, "quantile_blobs", None)
         if bulk is not None:
             # mass extraction: one vectorized pass over the whole
             # Arrow batch (10^6-group extractions spend more time in
             # per-blob Python than arithmetic otherwise)
-            ests = bulk(list(pdf[blob_col]), qs)
-            for i, n in enumerate(names):
+            ests = bulk(list(pdf[self.blob_col]), self.qs)
+            for i, n in enumerate(self.names):
                 out[n] = ests[:, i]
         else:
-            per = [deser(b).quantile(qs) for b in pdf[blob_col]]
-            for i, n in enumerate(names):
+            per = [
+                self.cls.deserialize(b).quantile(self.qs)
+                for b in pdf[self.blob_col]
+            ]
+            for i, n in enumerate(self.names):
                 out[n] = [e[i] for e in per]
         return out
-
-    return extract_pdf
 
 
 def with_quantiles(
@@ -774,10 +873,9 @@ def with_quantiles(
     prefix: str = "p",
 ) -> DataFrame:
     """blob column → one double column per requested quantile."""
-    names = _quantile_names(qs, prefix)
+    extract_pdf = _QuantileColumns(factory, qs, blob_col, prefix)
     fields = [f for f in blob_df.schema.fields if f.name != blob_col]
-    out_schema = StructType(fields + [StructField(n, _double(), True) for n in names])
-    extract_pdf = _quantile_extractor(factory, qs, blob_col, prefix)
+    out_schema = StructType(fields + extract_pdf.fields())
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -799,17 +897,27 @@ def sketch_quantiles_by_key(
     columns extracted in the SAME pass that finishes the per-key merge
     (sketch_by_key's ``post`` hook), saving one full JVM↔Python round
     trip of the merged blob frame. Row-for-row identical to the
-    two-stage form — same merge, same extraction kernel."""
-    names = _quantile_names(qs, prefix)
-    post_fields = [StructField(n, _double(), True) for n in names]
+    two-stage form — same merge, same extraction kernel.
+
+    When the call runs the single pass (``repartition`` or ``clustered``,
+    also as ``auto``'s pick) with one key, one value column and a sketch
+    that has ``quantile_sorted_groups_like``, the pass ends in the
+    quantile columns: no blob is serialized and parsed again in the same
+    task. The hook shares its interpolation (t-digest) or rank-select
+    (KLL) kernel with ``quantile_blobs`` and builds each group exactly
+    as the blob path does (``from_sorted`` above δ/2 or k values), so
+    the rows are bit-identical. A group's sketch is built once from
+    exactly its values whichever way its answer is read (Agarwal et
+    al., "Mergeable Summaries")."""
+    post = _QuantileColumns(factory, qs, prefix=prefix)
     return sketch_by_key(
         df,
         keys,
         value,
         factory,
         method=method,
-        post=_quantile_extractor(factory, qs, prefix=prefix),
-        post_fields=post_fields,
+        post=post,
+        post_fields=post.fields(),
     )
 
 
@@ -875,7 +983,6 @@ def merge_blobs_by_key(
             mi = pd.MultiIndex.from_frame(allp[list(keys)])
             codes, uniq = pd.factorize(mi, use_na_sentinel=False)
             key_of = lambda c: tuple(uniq[c])  # noqa: E731
-        import numpy as np
 
         order = np.argsort(codes, kind="stable")
         codes_s = codes[order]

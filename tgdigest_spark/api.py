@@ -13,11 +13,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .agg import (
+    _BLOB_SCHEMA,
+    _quantile_names,
+    _single_pass_partitions,
+    _sorted_segments,
+    _tree_merge,
     sketch_by_key,
     sketch_column,
     sketch_quantiles_by_key,
     with_quantiles,
 )
+from .pyfiles import ensure_shipped
 from .sketches.bloom import Bloom
 from .sketches.countmin import CountMin
 from .sketches.ddsketch import DDSketch
@@ -89,7 +95,10 @@ def interturn_latency_seconds(transcripts: DataFrame) -> DataFrame:
 
     No reference analog; required by BASELINE.json north_star. Window
     shuffles once on conv_id; at scale the table is written clustered by
-    (conv_id, turn_idx) so AQE coalesces cheap partitions.
+    (conv_id, turn_idx) so AQE coalesces cheap partitions. The latency
+    quantile ops compute the same lag inside their own Python pass
+    (:func:`_partition_latencies`); this row frame is their parity
+    reference.
     """
     from pyspark.sql import Window
 
@@ -107,12 +116,68 @@ def interturn_latency_seconds(transcripts: DataFrame) -> DataFrame:
     ).where(F.col("latency_s").isNotNull())
 
 
+def _latency_pass(transcripts: DataFrame, kernel, schema) -> DataFrame:
+    """``kernel`` over the partitions of ``(conv_id, turn_idx, us)``,
+    ``us`` the timezone-free epoch micros of ``ts``, co-located by
+    conv_id at the single-pass width (agg._single_pass_partitions): one
+    Exchange over a plain scan, none over a table bucketed by conv_id.
+    The kernel takes the lag itself (:func:`_partition_latencies`), so
+    the plan holds no Sort and no Window."""
+    from .functions.timeutil import epoch_us
+
+    ensure_shipped(transcripts.sparkSession)
+    us = epoch_us("ts", dict(transcripts.dtypes)["ts"])
+    proj = transcripts.select("conv_id", "turn_idx", us.alias("us"))
+    n = _single_pass_partitions(transcripts, ["conv_id"])
+    proj = proj.repartition(n, "conv_id") if n else proj.repartition("conv_id")
+    return proj.mapInPandas(kernel, schema=schema)
+
+
+def _partition_latencies(batches):
+    """(conv_id codes, conv_id uniques, latency seconds) of one
+    co-located partition, or None when it is empty. Rows are ordered by
+    (conv_id, turn_idx) with null turn_idx first, the Window's order,
+    and each turn's latency is its micros minus its predecessor's, kept
+    where both are non-null: the same long difference and double
+    division as :func:`interturn_latency_seconds`, so the values are
+    bit-identical."""
+    pdfs = [p for p in batches if len(p)]
+    if not pdfs:
+        return None
+    pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+    codes, uniq = pd.factorize(pdf["conv_id"], use_na_sentinel=False)
+    turn = pdf["turn_idx"]
+    order = np.lexsort(
+        (turn.fillna(0).to_numpy(), turn.notna().to_numpy(), codes)
+    )
+    conv = codes[order]
+    us = pdf["us"]
+    ok = us.notna().to_numpy()[order]
+    u = us.fillna(0).to_numpy().astype(np.int64)[order]
+    keep = (conv[1:] == conv[:-1]) & ok[1:] & ok[:-1]
+    lat = (u[1:] - u[:-1])[keep].astype(np.float64) / 1e6
+    return conv[1:][keep], uniq, lat
+
+
 def latency_quantiles(
     transcripts: DataFrame, qs: list[float] = (0.5, 0.95, 0.99), delta: int = 200
 ) -> dict[float, float]:
-    """p50/p95/p99 of inter-turn latency (north-star query #2)."""
-    lat = interturn_latency_seconds(transcripts)
-    return quantiles(lat, "latency_s", list(qs), delta=delta)
+    """p50/p95/p99 of inter-turn latency (north-star query #2).
+
+    One t-digest per co-located partition over the lags it computes
+    (:func:`_latency_pass`), tree-merged like :func:`quantiles`' partials:
+    within the digest's rank bound of ``quantiles`` over
+    :func:`interturn_latency_seconds`."""
+
+    def partial(batches):
+        got = _partition_latencies(batches)
+        if got is not None and got[2].size:
+            sk = TDigest(delta).update(got[2])
+            yield pd.DataFrame({"sketch": [sk.serialize()]})
+
+    partials = _latency_pass(transcripts, partial, _BLOB_SCHEMA)
+    est = _tree_merge(partials, lambda: TDigest(delta), 512).quantile(list(qs))
+    return dict(zip(qs, [float(e) for e in est]))
 
 
 def turns_per_conversation_quantiles(
@@ -132,25 +197,42 @@ def grouped_latency_quantiles(
     min_turns: int = 2,
 ) -> DataFrame:
     """Per-conversation latency quantiles: one t-digest per conv_id over
-    its inter-turn deltas (north-star per-group variant). Uses the
-    tiny-group bulk builder; conversations with < min_turns turns have
-    no deltas and are absent.
+    its inter-turn deltas (north-star per-group variant); conversations
+    with < min_turns turns have no deltas and are absent.
 
-    The lag window already hash-partitions the rows by conv_id, which
-    is the co-location the single-pass build needs: the 'repartition'
-    topology's exchange matches the window's and Spark drops it, so the
-    plan holds one Exchange and one Python node (vs two of each under
-    'combine'), with the same rows — every conversation's deltas reach
-    the build in one partition under both topologies."""
-    lat = interturn_latency_seconds(transcripts)
-    return sketch_quantiles_by_key(
-        lat,
-        ["conv_id"],
-        "latency_s",
-        lambda: TDigest(delta),
-        list(qs),
-        method="repartition",
+    One Python pass over the conv_id-co-located rows
+    (:func:`_latency_pass`: one Exchange over a plain scan, none over a
+    conv_id-bucketed table) takes the lag, sorts the deltas by
+    conversation and reads each group's quantiles from the sorted
+    segments (``TDigest.quantile_sorted_groups_like``). The rows are
+    bit-identical to ``sketch_quantiles_by_key`` over
+    :func:`interturn_latency_seconds` with ``combine`` or
+    ``repartition``: the Window's output holds each conversation whole
+    in one partition, so there too every digest is built once from
+    exactly its deltas."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    qs = list(qs)
+    names = _quantile_names(qs)
+    proto = TDigest(delta)
+
+    def per_conversation(batches):
+        got = _partition_latencies(batches)
+        if got is None or not got[2].size:
+            return
+        codes, uniq, lat = got
+        v, starts, ends, seg_codes = _sorted_segments(codes, lat)
+        ests = proto.quantile_sorted_groups_like(v, starts, ends, qs)
+        data = {"conv_id": list(uniq.take(seg_codes))}
+        for i, n in enumerate(names):
+            data[n] = ests[:, i]
+        yield pd.DataFrame(data)
+
+    schema = StructType(
+        [transcripts.schema["conv_id"]]
+        + [StructField(n, DoubleType(), True) for n in names]
     )
+    return _latency_pass(transcripts, per_conversation, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -106,6 +106,13 @@ def merge_blob_groups_bulk(sketch, blobs, starts, ends, extract_unit) -> list:
     return out
 
 
+def copy_segments(values, starts, lens, out, offs) -> None:
+    """``out[offs[i]:offs[i] + lens[i]] = values[starts[i]:starts[i] +
+    lens[i]]`` for every i, as one vectorized gather/scatter."""
+    within = np.arange(int(lens.sum())) - np.repeat(np.cumsum(lens) - lens, lens)
+    out[np.repeat(offs, lens) + within] = values[np.repeat(starts, lens) + within]
+
+
 def clean_numeric(values) -> np.ndarray:
     """Batch → float64 ndarray with NaN/None dropped.
 

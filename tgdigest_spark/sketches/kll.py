@@ -22,10 +22,51 @@ import struct
 
 import numpy as np
 
-from .base import Sketch, clean_numeric
+from .base import Sketch, clean_numeric, copy_segments
 
 _C = 2.0 / 3.0
 _MIN_CAP = 8
+
+
+def _select_segments(v_s, w_s, sizes, totals, mins, maxs, qs_arr) -> np.ndarray:
+    """(len(sizes), len(qs_arr)) inclusive-rank selects over consecutive
+    sketches whose weighted items are packed in ``v_s``/``w_s``, sorted
+    by value within each sketch (``sizes[i] > 0`` items of int64
+    weights summing to ``totals[i]``).
+
+    Exact parity trick: KLL item weights are powers of two, so
+    per-sketch cumulative weights are exact int64. The per-sketch
+    inclusive-rank select ``first cum >= q*n`` over integer cums is
+    equivalent to ``first cum >= ceil(q*n)``, an INTEGER threshold — so
+    all segments share one int64 key space (per-segment cums offset by a
+    running base) and a single searchsorted answers every (sketch, q)
+    with no floating-point drift."""
+    nseg = sizes.size
+    seg_of = np.repeat(np.arange(nseg), sizes)
+    ends = np.cumsum(sizes)
+    cs = np.cumsum(w_s)
+    cs_before = np.concatenate(([np.int64(0)], cs[ends[:-1] - 1]))
+    cum = cs - cs_before[seg_of]  # per-segment cum, exact int64
+    base = np.concatenate(([np.int64(0)], np.cumsum(totals)[:-1]))
+    keys = base[seg_of] + cum  # strictly increasing across segments
+
+    targets = np.clip(qs_arr, 0.0, 1.0)[None, :] * totals[:, None].astype(
+        np.float64
+    )
+    # NaN q: per-sketch clip(NaN)->NaN target makes searchsorted land
+    # past the end, i.e. the segment's LARGEST item — mirror that
+    # (ceil/int64-cast on NaN would otherwise emit INT64_MIN junk).
+    nan_q = np.isnan(qs_arr)
+    targets = np.where(nan_q[None, :], 1.0, targets)
+    t_int = np.maximum(np.ceil(targets), 1.0).astype(np.int64)
+    t_int = np.minimum(t_int, totals[:, None])  # stay inside segment
+    tkeys = (base[:, None] + t_int).ravel()
+    idx = np.searchsorted(keys, tkeys, side="left")
+    est = v_s[idx].reshape(nseg, qs_arr.size)
+    if nan_q.any():
+        est[:, nan_q] = v_s[ends - 1][:, None]
+    est = np.where(qs_arr[None, :] <= 0.0, mins[:, None], est)
+    return np.where(qs_arr[None, :] >= 1.0, maxs[:, None], est)
 
 
 class KLL(Sketch):
@@ -215,19 +256,13 @@ class KLL(Sketch):
     def quantile_blobs(cls, blobs, qs) -> np.ndarray:
         """(len(blobs), len(qs)) quantile estimates in ONE vectorized
         pass — EXACTLY equal to
-        ``[cls.deserialize(b).quantile(qs) for b in blobs]``.
-
-        Exact parity trick: KLL item weights are powers of two, so
-        per-sketch cumulative weights are exact int64. The per-blob
-        inclusive-rank select ``first cum >= q*n`` over integer cums is
-        equivalent to ``first cum >= ceil(q*n)``, an INTEGER threshold —
-        so all segments share one int64 key space (per-segment cums
-        offset by a running base) and a single searchsorted answers
-        every (blob, q) with no floating-point drift."""
+        ``[cls.deserialize(b).quantile(qs) for b in blobs]``. Parses the
+        headers, sorts each blob's weighted items by value and hands
+        them to :func:`_select_segments`, the rank-select kernel
+        :meth:`quantile_sorted_groups_like` shares."""
         p = len(blobs)
         qs_arr = np.atleast_1d(np.asarray(qs, dtype=np.float64))
-        nq = qs_arr.size
-        out = np.full((p, nq), np.nan)
+        out = np.full((p, qs_arr.size), np.nan)
         if p == 0:
             return out
         head = struct.Struct("<4sHIQddBB")
@@ -258,42 +293,61 @@ class KLL(Sketch):
         live = np.flatnonzero(item_counts > 0)
         if live.size == 0:
             return out
-        # keep only live segments' parts (parts were appended in blob
-        # order, so rebuild the concatenation per live blob)
+        # only live blobs appended parts, in blob order
         v = np.concatenate(vals_parts)
         w = np.concatenate(wts_parts)
         seg_sizes = item_counts[live]
-        seg_of = np.repeat(np.arange(live.size), seg_sizes)
-        order = np.lexsort((v, seg_of))
-        v_s, w_s = v[order], w[order]
-        ends = np.cumsum(seg_sizes)
-        cs = np.cumsum(w_s)
-        cs_before = np.concatenate(([np.int64(0)], cs[ends[:-1] - 1]))
-        cum = cs - cs_before[seg_of]  # per-segment cum, exact int64
-
-        tot_live = totals[live]
-        base = np.concatenate(([np.int64(0)], np.cumsum(tot_live)[:-1]))
-        keys = base[seg_of] + cum  # strictly increasing across segments
-
-        targets = np.clip(qs_arr, 0.0, 1.0)[None, :] * tot_live[:, None].astype(
-            np.float64
+        order = np.lexsort((v, np.repeat(np.arange(live.size), seg_sizes)))
+        out[live] = _select_segments(
+            v[order], w[order], seg_sizes, totals[live], mins[live],
+            maxs[live], qs_arr,
         )
-        # NaN q: per-blob clip(NaN)->NaN target makes searchsorted land
-        # past the end, i.e. the segment's LARGEST item — mirror that
-        # (ceil/int64-cast on NaN would otherwise emit INT64_MIN junk).
-        nan_q = np.isnan(qs_arr)
-        targets = np.where(nan_q[None, :], 1.0, targets)
-        t_int = np.maximum(np.ceil(targets), 1.0).astype(np.int64)
-        t_int = np.minimum(t_int, tot_live[:, None])  # stay inside segment
-        tkeys = (base[:, None] + t_int).ravel()
-        idx = np.searchsorted(keys, tkeys, side="left")
-        est = v_s[idx].reshape(live.size, nq)
-        if nan_q.any():
-            last_item = v_s[ends - 1]
-            est[:, nan_q] = last_item[:, None]
-        est = np.where(qs_arr[None, :] <= 0.0, mins[live][:, None], est)
-        est = np.where(qs_arr[None, :] >= 1.0, maxs[live][:, None], est)
-        out[live] = est
+        return out
+
+    def quantile_sorted_groups_like(self, values, starts, ends, qs) -> np.ndarray:
+        """(len(starts), len(qs)) estimates for consecutive sorted group
+        segments of ``values``, BIT-IDENTICAL to
+        ``quantile_blobs(serialize_sorted_groups_like(values, starts,
+        ends), qs)`` without building a blob: a group of at most k
+        values is one level-0 compactor (its sorted values, weight 1),
+        a larger one builds through ``from_sorted_like`` and its items
+        are stably sorted as the blob path's lexsort would; both feed
+        the same rank-select kernel. An empty group answers NaN."""
+        values = np.asarray(values, dtype=np.float64)
+        starts = np.asarray(starts, dtype=np.int64)
+        ends = np.asarray(ends, dtype=np.int64)
+        qs_arr = np.atleast_1d(np.asarray(qs, dtype=np.float64))
+        out = np.full((starts.size, qs_arr.size), np.nan)
+        n = ends - starts
+        live = np.flatnonzero(n > 0)
+        if live.size == 0:
+            return out
+        s, e, nl = starts[live], ends[live], n[live]
+        sizes = nl.copy()  # items per group
+        totals = nl.copy()
+        big = np.flatnonzero(nl > self.k)
+        parts = []
+        for i in big:
+            sk = self.from_sorted_like(values[s[i] : e[i]])
+            v_i = np.concatenate(sk.levels)
+            w_i = np.concatenate(
+                [np.full(lv.size, np.int64(1) << j) for j, lv in enumerate(sk.levels)]
+            )
+            order = np.argsort(v_i, kind="stable")
+            parts.append((v_i[order], w_i[order]))
+            sizes[i] = v_i.size
+            totals[i] = int(w_i.sum())
+        offs = np.cumsum(sizes) - sizes
+        v = np.empty(int(sizes.sum()))
+        w = np.ones(v.size, dtype=np.int64)
+        small = np.flatnonzero(nl <= self.k)
+        copy_segments(values, s[small], nl[small], v, offs[small])
+        for i, (v_i, w_i) in zip(big, parts):
+            v[offs[i] : offs[i] + sizes[i]] = v_i
+            w[offs[i] : offs[i] + sizes[i]] = w_i
+        out[live] = _select_segments(
+            v, w, sizes, totals, values[s], values[e - 1], qs_arr
+        )
         return out
 
     # -- serialization ----------------------------------------------------

@@ -43,7 +43,7 @@ import struct
 
 import numpy as np
 
-from .base import Sketch, clean_numeric
+from .base import Sketch, clean_numeric, copy_segments
 
 _TWO_PI = 2.0 * np.pi
 
@@ -57,6 +57,83 @@ def _chunk_cap(q: np.ndarray, n: int, delta: int) -> np.ndarray:
     (max(8q(1-q)/delta, 1e-3) · n), and never below one value."""
     bound = np.maximum(8.0 * q * (1.0 - q) / delta, 1e-3)
     return np.maximum(1, np.floor(2.0 * n * bound)).astype(np.int64)
+
+
+def _clip_qs(qs) -> np.ndarray:
+    return np.clip(np.atleast_1d(np.asarray(qs, dtype=np.float64)), 0, 1)
+
+
+def _interp_segments(m, w, ns, mins, maxs, counts, qs_arr) -> np.ndarray:
+    """(len(ns), len(qs_arr)) estimates for consecutive digests whose
+    centroids are packed in ``m``/``w`` (``ns[i] > 0`` centroids each,
+    ``counts[i] > 0``): the piecewise-linear interpolation of
+    ``TDigest.quantile`` for ALL digests as a single searchsorted over a
+    (2*segment_id + normalized-rank) key (ranks normalized to [0,1] make
+    the key strictly increasing across segments). ``qs_arr`` comes
+    clipped to [0, 1] (:func:`_clip_qs`).
+
+    The interpolation itself runs in RAW rank space with np.interp's
+    slope-form float ops, so for the same node pair the result is
+    bit-identical to quantile(). Node SELECTION goes through the packed
+    normalized key, whose rounding can pick the neighboring node only
+    when q collides with a node rank within ~one ulp."""
+    nq = qs_arr.size
+    nseg = ns.size
+    seg_of = np.repeat(np.arange(nseg), ns)
+    ends = np.cumsum(ns)
+    starts = ends - ns
+    cs = np.cumsum(w)
+    cs_before = np.concatenate(([0.0], cs[ends[:-1] - 1]))
+    # centroid mid-ranks: raw within-segment (the space quantile()
+    # interpolates in), plus a [0, 1]-normalized copy used ONLY to
+    # build the strictly-increasing cross-segment search key
+    rank_raw = cs - cs_before[seg_of] - 0.5 * w
+    rank_norm = rank_raw / counts[seg_of]
+
+    k = ns + 2  # nodes: min + centroids + max
+    node_ends = np.cumsum(k) - 1
+    node_starts = node_ends - k + 1
+    total = int(node_ends[-1]) + 1
+    rr = np.empty(total)
+    rr_raw = np.empty(total)
+    vv = np.empty(total)
+    rr[node_starts] = 0.0
+    rr[node_ends] = 1.0
+    rr_raw[node_starts] = 0.0
+    rr_raw[node_ends] = counts
+    vv[node_starts] = mins
+    vv[node_ends] = maxs
+    pos = node_starts[seg_of] + 1 + (np.arange(m.size) - starts[seg_of])
+    rr[pos] = rank_norm
+    rr_raw[pos] = rank_raw
+    vv[pos] = m
+
+    rkey = 2.0 * np.repeat(np.arange(nseg), k) + rr
+    tkey = (
+        2.0 * np.arange(nseg)[:, None] + qs_arr[None, :]
+    ).ravel()  # (nseg*nq,)
+    idx = np.searchsorted(rkey, tkey, side="right")
+    seg_rep = np.repeat(np.arange(nseg), nq)
+    lo = np.clip(idx - 1, node_starts[seg_rep], node_ends[seg_rep] - 1)
+    hi = lo + 1
+    # interpolate in RAW rank space with np.interp's slope-form
+    # arithmetic — elementwise bit-identical to quantile()'s
+    # np.interp(q*count, ranks, vals) for the same node pair
+    cnt_rep = counts[seg_rep]
+    t_raw = np.tile(qs_arr, nseg) * cnt_rep
+    denom = rr_raw[hi] - rr_raw[lo]
+    slope = (vv[hi] - vv[lo]) / np.where(denom > 0, denom, 1.0)
+    est = vv[lo] + slope * (t_raw - rr_raw[lo])
+    # np.interp clamps to the end values at/beyond the extremes
+    est = np.where(t_raw >= cnt_rep, maxs[seg_rep], est)
+    est = np.where(t_raw <= 0.0, mins[seg_rep], est)
+    est = est.reshape(nseg, nq)
+    # parity with quantile(): a single-centroid digest answers its
+    # mean for every q (no interpolation toward min/max)
+    single = np.flatnonzero(ns == 1)
+    if single.size:
+        est[single, :] = m[starts[single], None]
+    return est
 
 
 class TDigest(Sketch):
@@ -259,29 +336,23 @@ class TDigest(Sketch):
         ``[cls.deserialize(b).quantile(qs) for b in blobs]`` without
         constructing len(blobs) objects. The mass-extraction hot path:
         per-group quantiles over 10^6+ tiny digests spend more time in
-        per-blob Python than in arithmetic; here headers are unpacked,
-        centroid arrays concatenated once, and the piecewise-linear
-        interpolation for ALL digests runs as a single searchsorted over
-        a (2*segment_id + normalized-rank) key (ranks normalized to
-        [0,1] make the key strictly increasing across segments).
+        per-blob Python than in arithmetic; here headers are unpacked
+        and the centroid arrays handed to :func:`_interp_segments`, the
+        interpolation kernel :meth:`quantile_sorted_groups_like` shares,
+        so reading a group's answer from its blob or from its sorted
+        values is one computation.
 
-        Parity contract vs quantile(): the interpolation itself runs in
-        RAW rank space with np.interp's slope-form float ops, so for the
-        same node pair the result is bit-identical. Node SELECTION goes
-        through the packed normalized key, whose rounding can pick the
-        neighboring node only when q collides with a node rank within
-        ~one ulp — the answers then differ by at most one interpolation
-        step of that collision (|diff| <= slope * ulp(rank)), the bound
+        Parity contract vs quantile(): see :func:`_interp_segments` —
+        bit-identical for the same node pair; a q colliding with a node
+        rank within ~one ulp may pick the neighboring node, differing by
+        at most slope * ulp(rank), the bound
         test_quantile_blobs_property_parity asserts eps-scaled."""
-        import struct as _struct
-
         p = len(blobs)
-        qs_arr = np.clip(np.atleast_1d(np.asarray(qs, dtype=np.float64)), 0, 1)
-        nq = qs_arr.size
-        out = np.full((p, nq), np.nan)
+        qs_arr = _clip_qs(qs)
+        out = np.full((p, qs_arr.size), np.nan)
         if p == 0:
             return out
-        head = _struct.Struct("<4sHIQddd")
+        head = struct.Struct("<4sHIQddd")
         off0 = head.size
         ns = np.empty(p, np.int64)
         mins = np.empty(p)
@@ -303,67 +374,51 @@ class TDigest(Sketch):
         if live.size < p:
             means_parts = [means_parts[i] for i in live]
             weights_parts = [weights_parts[i] for i in live]
-        ns_l, mins_l, maxs_l, counts_l = (
-            ns[live], mins[live], maxs[live], counts[live]
+        out[live] = _interp_segments(
+            np.concatenate(means_parts),
+            np.concatenate(weights_parts),
+            ns[live],
+            mins[live],
+            maxs[live],
+            counts[live],
+            qs_arr,
         )
-        m = np.concatenate(means_parts)
-        w = np.concatenate(weights_parts)
-        nseg = live.size
-        seg_of = np.repeat(np.arange(nseg), ns_l)
-        ends = np.cumsum(ns_l)
-        starts = ends - ns_l
-        cs = np.cumsum(w)
-        cs_before = np.concatenate(([0.0], cs[ends[:-1] - 1]))
-        # centroid mid-ranks: raw within-segment (the space quantile()
-        # interpolates in), plus a [0, 1]-normalized copy used ONLY to
-        # build the strictly-increasing cross-segment search key
-        rank_raw = cs - cs_before[seg_of] - 0.5 * w
-        rank_norm = rank_raw / counts_l[seg_of]
+        return out
 
-        k = ns_l + 2  # nodes: min + centroids + max
-        node_ends = np.cumsum(k) - 1
-        node_starts = node_ends - k + 1
-        total = int(node_ends[-1]) + 1
-        rr = np.empty(total)
-        rr_raw = np.empty(total)
-        vv = np.empty(total)
-        rr[node_starts] = 0.0
-        rr[node_ends] = 1.0
-        rr_raw[node_starts] = 0.0
-        rr_raw[node_ends] = counts_l
-        vv[node_starts] = mins_l
-        vv[node_ends] = maxs_l
-        pos = node_starts[seg_of] + 1 + (np.arange(m.size) - starts[seg_of])
-        rr[pos] = rank_norm
-        rr_raw[pos] = rank_raw
-        vv[pos] = m
-
-        rkey = 2.0 * np.repeat(np.arange(nseg), k) + rr
-        tkey = (
-            2.0 * np.arange(nseg)[:, None] + qs_arr[None, :]
-        ).ravel()  # (nseg*nq,)
-        idx = np.searchsorted(rkey, tkey, side="right")
-        seg_rep = np.repeat(np.arange(nseg), nq)
-        lo = np.clip(idx - 1, node_starts[seg_rep], node_ends[seg_rep] - 1)
-        hi = lo + 1
-        # interpolate in RAW rank space with np.interp's slope-form
-        # arithmetic — elementwise bit-identical to quantile()'s
-        # np.interp(q*count, ranks, vals) for the same node pair
-        cnt_rep = counts_l[seg_rep]
-        t_raw = np.tile(qs_arr, nseg) * cnt_rep
-        denom = rr_raw[hi] - rr_raw[lo]
-        slope = (vv[hi] - vv[lo]) / np.where(denom > 0, denom, 1.0)
-        est = vv[lo] + slope * (t_raw - rr_raw[lo])
-        # np.interp clamps to the end values at/beyond the extremes
-        est = np.where(t_raw >= cnt_rep, maxs_l[seg_rep], est)
-        est = np.where(t_raw <= 0.0, mins_l[seg_rep], est)
-        est = est.reshape(nseg, nq)
-        # parity with quantile(): a single-centroid digest answers its
-        # mean for every q (no interpolation toward min/max)
-        single = np.flatnonzero(ns_l == 1)
-        if single.size:
-            est[single, :] = m[starts[single], None]
-        out[live] = est
+    def quantile_sorted_groups_like(self, values, starts, ends, qs) -> np.ndarray:
+        """(len(starts), len(qs)) estimates for consecutive sorted group
+        segments of ``values``, BIT-IDENTICAL to
+        ``quantile_blobs(serialize_sorted_groups_like(values, starts,
+        ends), qs)`` without building a blob: a group of at most
+        delta/2 values is its own digest (its values are the unit-weight
+        centroids), a larger one builds through ``from_sorted``, and
+        both feed the same interpolation kernel in the same group order.
+        An empty group answers NaN, like the empty digest's blob."""
+        values = np.asarray(values, dtype=np.float64)
+        starts = np.asarray(starts, dtype=np.int64)
+        ends = np.asarray(ends, dtype=np.int64)
+        qs_arr = _clip_qs(qs)
+        out = np.full((starts.size, qs_arr.size), np.nan)
+        n = ends - starts
+        live = np.flatnonzero(n > 0)
+        if live.size == 0:
+            return out
+        s, e, nl = starts[live], ends[live], n[live]
+        ns = nl.copy()  # centroids per group
+        big = np.flatnonzero(nl > self.delta // 2)
+        digests = [TDigest.from_sorted(values[s[i] : e[i]], self.delta) for i in big]
+        ns[big] = [td.means.size for td in digests]
+        offs = np.cumsum(ns) - ns
+        m = np.empty(int(ns.sum()))
+        w = np.ones(m.size)
+        small = np.flatnonzero(nl <= self.delta // 2)
+        copy_segments(values, s[small], nl[small], m, offs[small])
+        for i, td in zip(big, digests):
+            m[offs[i] : offs[i] + ns[i]] = td.means
+            w[offs[i] : offs[i] + ns[i]] = td.weights
+        out[live] = _interp_segments(
+            m, w, ns, values[s], values[e - 1], nl.astype(np.float64), qs_arr
+        )
         return out
 
     def merge_blob_groups_like(self, blobs, starts, ends) -> list:
