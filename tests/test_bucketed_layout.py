@@ -231,3 +231,89 @@ def test_per_conversation_ops_plan_no_exchange_over_bucketed(
             hi = np.searchsorted(lat, est, "right") / lat.size
             err = 0.0 if lo <= q <= hi else min(abs(lo - q), abs(hi - q))
             assert err <= max(8 * q * (1 - q) / 200, 1e-3, 1 / lat.size), (q, est)
+
+
+def test_default_conf_bucketed_read_keeps_conversations_whole(
+    spark, transcripts, tmp_path_factory, monkeypatch
+):
+    """A conv_id-bucketed table re-attached with register_bucketed_table
+    and read through ``spark.table`` under Spark's default
+    ``autoBucketedScan``. A bare mapInPandas requires no distribution,
+    so Spark plans that scan unbucketed; a ``repartition(N, conv_id)``
+    with N equal to the bucket count would still be dropped (at planning
+    time it matches the bucketed scan's partitioning) and a conversation
+    written by several tasks would then reach several tasks. The table
+    has as many buckets as the single pass's own width on the plain
+    layout, and every per-conversation op must return the plain
+    layout's rows: on the table itself, joined to a broadcast side
+    (a derived plan, sized by the conf), and with the key renamed."""
+    from tgdigest_spark import api
+    from tgdigest_spark.agg import _plan_facts, _single_pass_partitions
+    from tgdigest_spark.api import interturn_latency_seconds
+    from tgdigest_spark.sources.transcripts import (
+        register_bucketed_table,
+        write_transcripts_bucketed,
+    )
+
+    n = _single_pass_partitions(transcripts, ["conv_id"])
+    assert n == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    path = str(tmp_path_factory.mktemp("bucketed_auto") / "t_auto")
+    # several writer tasks: each bucket holds several files
+    write_transcripts_bucketed(
+        transcripts.repartition(n), "t_auto", n_buckets=n, path=path
+    )
+    spark.sql("DROP TABLE t_auto")
+    register_bucketed_table(spark, "t_auto", path, n_buckets=n)
+    conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    saved = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
+
+    totals = []
+    real = api._tree_merge
+
+    def spy(partials, factory, fanout):
+        merged = real(partials, factory, fanout)
+        totals.append(merged.count)
+        return merged
+
+    monkeypatch.setattr(api, "_tree_merge", spy)
+    length = F.length("text").cast("double")
+    qs = [0.5, 0.95]
+    tags = F.broadcast(
+        transcripts.select("conv_id").distinct().withColumn("tag", F.lit(1))
+    )
+
+    def by_key(frame, key="conv_id"):
+        return sorted(frame.collect(), key=lambda r: r[key])
+
+    try:
+        df = spark.table("t_auto")
+        facts = _plan_facts(df, ["conv_id"])
+        # the scan alone is unbucketed, the table is bucketed
+        assert (facts.bucket_width, facts.bucket_counts) == (None, {n})
+        assert _single_pass_partitions(df, ["conv_id"]) != n
+
+        for shape in (lambda t: t, lambda t: t.join(tags, "conv_id")):
+            for run in (
+                lambda t: api.grouped_quantiles(t, ["conv_id"], length, qs),
+                lambda t: api.grouped_quantiles_kll(t, ["conv_id"], length, qs),
+                lambda t: api.grouped_latency_quantiles(t, qs),
+            ):
+                assert by_key(run(shape(df))) == by_key(run(shape(transcripts)))
+            api.latency_quantiles(shape(df), qs)
+            assert totals[-1] == interturn_latency_seconds(transcripts).count()
+
+        def renamed(t):
+            return api.grouped_quantiles(
+                t.withColumnRenamed("conv_id", "c"),
+                ["c"],
+                length,
+                qs,
+                method="repartition",
+            )
+
+        assert by_key(renamed(df), "c") == by_key(renamed(transcripts), "c")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_auto")
+        if saved is not None:
+            spark.conf.set(conf, saved)

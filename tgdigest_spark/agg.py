@@ -41,10 +41,12 @@ exercised locally on local[N]):
     scan is shuffled onto one wave of tasks (one per core, more as the
     input grows, see :func:`_single_pass_partitions`); a scan bucketed
     by the keys keeps its bucket count, and any other input takes the
-    session's shuffle width. Input already hash-partitioned by the keys
-    at that width (a bucketed scan, or the output of a
-    ``Window.partitionBy(keys)``) keeps its partitioning and Spark drops
-    the repartition.
+    session's shuffle width. The width is never the bucket count of a
+    table that the plan reads without a bucketed scan: Spark would drop
+    that repartition and leave keys split across tasks. Input already
+    hash-partitioned by the keys at that width (a bucketed scan, or the
+    output of a ``Window.partitionBy(keys)``) keeps its partitioning and
+    Spark drops the repartition.
   - ``method='salted'``: explicit two-stage salted repartitioning
     (north_rule): groupBy(key, salt=pmod(xxhash64(salt_col), S)) →
     partial → groupBy(key) → merge. Use when per-partition key
@@ -261,10 +263,14 @@ class _PlanFacts(NamedTuple):
     * ``bucket_width``: N when that scan reports
       ``HashPartitioning(keys, N)`` — a table bucketed by exactly the
       keys, read with a bucketed scan — else None.
+    * ``bucket_counts``: the bucket count of every bucketed file
+      relation anywhere in the plan, whatever its scan reports and
+      whatever it is bucketed by.
     """
 
     files: list[str] | None
     bucket_width: int | None
+    bucket_counts: frozenset[int] = frozenset()
 
 
 def _plan_facts(df: DataFrame, keys: list[str]) -> _PlanFacts:
@@ -275,12 +281,20 @@ def _plan_facts(df: DataFrame, keys: list[str]) -> _PlanFacts:
     (``select(col("other").alias("k"))`` over a file that has its own
     ``k``) is a new attribute and is never probed. Gates the 'auto'
     probe so it never re-executes derived upstream compute (joins,
-    aggregates, Python stages) just to pick a topology.
+    aggregates, Python stages) just to pick a topology. The bucket
+    counts are read from every leaf, derived plan or not.
     """
     unknown = _PlanFacts(None, None)
     try:
         qe = df._jdf.queryExecution()
         root = qe.optimizedPlan()
+        counts = set()
+        for leaf in _java_seq(root.collectLeaves()):
+            if leaf.nodeName() == "LogicalRelation":
+                spec = leaf.relation().bucketSpec()
+                if spec.isDefined():
+                    counts.add(int(spec.get().numBuckets()))
+        unknown = _PlanFacts(None, None, frozenset(counts))
         allowed = {
             "Project",
             "Filter",
@@ -288,7 +302,6 @@ def _plan_facts(df: DataFrame, keys: list[str]) -> _PlanFacts:
             "RepartitionByExpression",
         }
         scanned = set()
-        bucketed = False
         stack = [root]
         while stack:
             node = stack.pop()
@@ -296,10 +309,7 @@ def _plan_facts(df: DataFrame, keys: list[str]) -> _PlanFacts:
             if not ch:
                 if node.nodeName() != "LogicalRelation":
                     return unknown
-                scanned.update(
-                    a.exprId().id() for a in _java_seq(node.output())
-                )
-                bucketed = bucketed or node.relation().bucketSpec().isDefined()
+                scanned.update(a.exprId().id() for a in _java_seq(node.output()))
                 continue
             if node.nodeName() not in allowed:
                 return unknown
@@ -309,7 +319,7 @@ def _plan_facts(df: DataFrame, keys: list[str]) -> _PlanFacts:
         if not all(i in scanned for i in key_ids):
             return unknown
         files = sorted(df.inputFiles())
-        width = _bucket_width(qe, key_ids) if bucketed else None
+        width = _bucket_width(qe, key_ids) if counts else None
     except Exception:  # pragma: no cover — Connect / exotic plans
         return unknown
     if not files:
@@ -332,7 +342,7 @@ def _plan_facts(df: DataFrame, keys: list[str]) -> _PlanFacts:
     # partition column): not probed
     if not all(k in names for k in keys):
         return unknown
-    return _PlanFacts(paths, width)
+    return _PlanFacts(paths, width, unknown.bucket_counts)
 
 
 def _bucket_width(qe, key_ids: list) -> int | None:
@@ -420,7 +430,10 @@ def _single_pass_partitions(
     input files, at least one per core, at most
     ``spark.sql.shuffle.partitions`` — or None (let Spark size the
     exchange) when the input is not a plain parquet scan or the conf is
-    not a number.
+    not a number. Never, in either case, the bucket count of a table
+    the plan reads unless its scan co-locates the keys: Spark could
+    drop that repartition and leave the keys split (the next width
+    down is taken instead, or up from 1).
 
     Every Python task pays a fixed start cost, whatever its rows:
     about 0.06 s per wave of tasks on local[4] with the worker's
@@ -439,14 +452,29 @@ def _single_pass_partitions(
     if facts.bucket_width:
         return facts.bucket_width
     width = _shuffle_partitions(df.sparkSession)
-    if width is None or facts.files is None:
-        return None
-    try:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        size = sum(os.path.getsize(p) for p in facts.files)
-    except Exception:  # pragma: no cover — Connect / vanished file
-        return None
-    return min(width, max(par, -(-size // _SINGLE_PASS_BYTES_PER_TASK)))
+    n = None
+    if width is not None and facts.files is not None:
+        try:
+            par = df.sparkSession.sparkContext.defaultParallelism
+            size = sum(os.path.getsize(p) for p in facts.files)
+            n = min(width, max(par, -(-size // _SINGLE_PASS_BYTES_PER_TASK)))
+        except Exception:  # pragma: no cover — Connect / vanished file
+            pass
+    w, avoid = n or width, facts.bucket_counts
+    if w in avoid:
+        # A table bucketed by the keys (or by a column they alias) whose
+        # scan Spark plans unbucketed because nothing downstream needs
+        # the distribution (autoBucketedScan, on by default). Spark
+        # drops a repartition to the bucket count while the scan still
+        # looks bucketed, then turns the bucketed scan off: a key whose
+        # rows sit in several files reaches several tasks. Any other
+        # width keeps the Exchange.
+        return next(
+            c
+            for c in [*range(w - 1, 0, -1), *range(w + 1, w + 2 + len(avoid))]
+            if c not in avoid
+        )
+    return n
 
 
 def _sorted_segments(codes: np.ndarray, v: np.ndarray):
@@ -465,6 +493,34 @@ def _sorted_segments(codes: np.ndarray, v: np.ndarray):
     else:
         starts = ends = seg_codes = np.empty(0, dtype=np.int64)
     return v_v, starts, ends, seg_codes
+
+
+def _segment_quantile_frame(
+    key: str,
+    codes: np.ndarray,
+    uniq,
+    v: np.ndarray,
+    proto: Sketch,
+    qs: list[float],
+    names: list[str],
+    empty_groups: bool = True,
+) -> pd.DataFrame:
+    """One row per group: ``key`` (``uniq`` at the group's code) and one
+    double column per name in ``names``, answered from the sorted
+    segments by ``proto.quantile_sorted_groups_like`` — no blob built.
+    A group of ``uniq`` whose values are all NaN answers NaN, or has no
+    row when ``empty_groups`` is False."""
+    v_v, starts, ends, seg_codes = _sorted_segments(codes, v)
+    if empty_groups:
+        missing = np.setdiff1d(np.arange(len(uniq)), seg_codes)
+        none = np.zeros(missing.size, dtype=np.int64)
+        starts, ends = np.r_[starts, none], np.r_[ends, none]
+        seg_codes = np.r_[seg_codes, missing]
+    ests = proto.quantile_sorted_groups_like(v_v, starts, ends, qs)
+    data = {key: list(uniq.take(seg_codes))}
+    for i, name in enumerate(names):
+        data[name] = ests[:, i]
+    return pd.DataFrame(data)
 
 
 def sketch_by_key(
@@ -561,14 +617,13 @@ def sketch_by_key(
         bulk = getattr(proto, "from_sorted_like", None)
         ser_bulk = getattr(proto, "serialize_sorted_groups_like", None)
         hashed_bulk = getattr(proto, "serialize_hashed_groups_like", None)
-        seg_quantiles = getattr(proto, "quantile_sorted_groups_like", None)
         # the single pass's partition IS the final group set: under a
         # quantile post it answers straight from the sorted segments,
         # no blob serialized and parsed again in the same task
         direct = (
             method == "clustered"
             and isinstance(post, _QuantileColumns)
-            and seg_quantiles is not None
+            and hasattr(proto, "quantile_sorted_groups_like")
             and bulk is not None
             and len(keys) == 1
             and not multi
@@ -638,19 +693,14 @@ def sketch_by_key(
             k = keys[0]
             codes, uniq = pd.factorize(pdf[k], use_na_sentinel=False)
             v = pdf["v"].to_numpy(dtype=np.float64, na_value=np.nan)
+            if direct:
+                return _segment_quantile_frame(
+                    k, codes, uniq, v, proto, post.qs, post.names
+                )
             v_v, starts, ends, seg_codes = _sorted_segments(codes, v)
             # groups whose values were all-null still get an (empty)
-            # sketch: a NaN answer, or one shared empty blob
+            # sketch — one shared blob, they are all identical
             missing = np.setdiff1d(np.arange(len(uniq)), seg_codes)
-            if direct:
-                none = np.zeros(missing.size, dtype=np.int64)
-                ests = seg_quantiles(
-                    v_v, np.r_[starts, none], np.r_[ends, none], post.qs
-                )
-                data = {k: list(uniq.take(np.r_[seg_codes, missing]))}
-                for i, name in enumerate(post.names):
-                    data[name] = ests[:, i]
-                return pd.DataFrame(data)
             if ser_bulk is not None:
                 blobs = ser_bulk(v_v, starts, ends)
             else:

@@ -15,8 +15,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from .agg import (
     _BLOB_SCHEMA,
     _quantile_names,
+    _segment_quantile_frame,
     _single_pass_partitions,
-    _sorted_segments,
     _tree_merge,
     sketch_by_key,
     sketch_column,
@@ -120,7 +120,8 @@ def _latency_pass(transcripts: DataFrame, kernel, schema) -> DataFrame:
     """``kernel`` over the partitions of ``(conv_id, turn_idx, us)``,
     ``us`` the timezone-free epoch micros of ``ts``, co-located by
     conv_id at the single-pass width (agg._single_pass_partitions): one
-    Exchange over a plain scan, none over a table bucketed by conv_id.
+    Exchange over a plain scan, none over a bucketed scan of a table
+    bucketed by conv_id.
     The kernel takes the lag itself (:func:`_partition_latencies`), so
     the plan holds no Sort and no Window."""
     from .functions.timeutil import epoch_us
@@ -197,14 +198,16 @@ def grouped_latency_quantiles(
     min_turns: int = 2,
 ) -> DataFrame:
     """Per-conversation latency quantiles: one t-digest per conv_id over
-    its inter-turn deltas (north-star per-group variant); conversations
-    with < min_turns turns have no deltas and are absent.
+    its inter-turn deltas (north-star per-group variant); a conversation
+    without a delta (no two consecutive turns that both carry a ``ts``)
+    has no row. ``min_turns`` is currently ignored: no further cut on
+    turn count is applied.
 
     One Python pass over the conv_id-co-located rows
     (:func:`_latency_pass`: one Exchange over a plain scan, none over a
-    conv_id-bucketed table) takes the lag, sorts the deltas by
-    conversation and reads each group's quantiles from the sorted
-    segments (``TDigest.quantile_sorted_groups_like``). The rows are
+    bucketed scan of a conv_id-bucketed table) takes the lag, sorts the
+    deltas by conversation and reads each group's quantiles from the
+    sorted segments (``TDigest.quantile_sorted_groups_like``). The rows are
     bit-identical to ``sketch_quantiles_by_key`` over
     :func:`interturn_latency_seconds` with ``combine`` or
     ``repartition``: the Window's output holds each conversation whole
@@ -221,12 +224,9 @@ def grouped_latency_quantiles(
         if got is None or not got[2].size:
             return
         codes, uniq, lat = got
-        v, starts, ends, seg_codes = _sorted_segments(codes, lat)
-        ests = proto.quantile_sorted_groups_like(v, starts, ends, qs)
-        data = {"conv_id": list(uniq.take(seg_codes))}
-        for i, n in enumerate(names):
-            data[n] = ests[:, i]
-        yield pd.DataFrame(data)
+        yield _segment_quantile_frame(
+            "conv_id", codes, uniq, lat, proto, qs, names, empty_groups=False
+        )
 
     schema = StructType(
         [transcripts.schema["conv_id"]]

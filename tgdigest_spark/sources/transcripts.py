@@ -167,8 +167,10 @@ def read_transcripts_bucketed(
     break the co-location contract of ``method='clustered'`` sketches
     (a pure mapInPandas declares no required distribution). Window /
     groupBy consumers don't need the flag — their required distribution
-    triggers the bucketed scan on its own — but leaving it set is safe:
-    it only pins bucket-aligned reads of bucketed tables.
+    triggers the bucketed scan on its own — and the library's own
+    single pass and latency ops stay correct without it, paying one
+    Exchange; leaving it set is safe: it only pins bucket-aligned reads
+    of bucketed tables.
     """
     if force_bucketed_scan:
         spark.conf.set(
